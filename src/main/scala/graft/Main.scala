@@ -2,11 +2,12 @@ package graft
 
 import graft.analysis.{Analyzer, AsciiFoldingFilter, LowercaseFilter, NgramTokenizer, StandardTokenizer, StemmerFilter, StopWordFilter, SynonymFilter, TokenFilter}
 import graft.index.Ids
-import graft.query.{And, Or, Searcher}
+import graft.query.{And, Federation, Or, QueryTarget, Searcher}
 import graft.storage.{ParquetIndexStorage, StorageParams}
 import graft.streaming.StreamingIndexer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** spark-submit deployment surface for the engine (north_star: "runs via
   * spark-submit on multi-executor clusters").
@@ -34,8 +35,8 @@ import org.apache.spark.sql.functions._
   *  - `remove`: delete documents from a committed index (retention /
   *    right-to-be-forgotten). Input rows carry either `doc_ord` or the
   *    index's key columns (conv_id, turn_idx). Idempotent per `--batch-id`.
-  *  - `search`: run one query against a committed index and print a TSV of
-  *    results (modes: and, or, phrase, tfidf, bm25, wand, all).
+  *  - `search`: run one query against a committed index, or a federation
+  *    of slice indexes, and print a TSV of results (modes: [[searchModes]]).
   *  - `batch`: evaluate a FILE of queries (one per line) as ONE Spark plan —
   *    the capacity shape (per-query plans are pinned at a few q/s by driver
   *    latency at any cluster size; the batch plan amortizes it). Mode
@@ -68,8 +69,8 @@ object Main {
     } finally spark.stop()
   }
 
-  private val usage: String =
-    """usage: graft.Main <build|delta|remove|search|serve|batch|vacuum|compact|stats> [options]
+  private lazy val usage: String =
+    s"""usage: graft.Main <build|delta|remove|search|serve|batch|vacuum|compact|stats> [options]
       |  build  --input <parquet> --index <path> [--text-col text]
       |         [--analyzer standard|stem|ngram:N] [--stopwords a,b,c]
       |         [--fold true] [--synonyms term=canonical,term2=canonical2]
@@ -80,7 +81,7 @@ object Main {
       |  remove --input <parquet of doc_ord or key columns> --index <path>
       |         [--batch-id <id>]
       |  search --index <path>[,<path>…] --query <q>
-      |         [--mode and|or|phrase|phrase-prefix|msm|tfidf|bm25|lm|wand|collapse|all|qs|qs-ranked|prefix|fuzzy|wildcard|regexp|range|rescore|mlt|termvectors|explain|highlight|snippet|suggest|dym|facets|sigterms|context]
+      |         [--mode ${searchModes.keys.mkString("|")}]
       |         [--k 10] [--limit 20] [--max-edits 1] [--slop 0]
       |         [--min-match 2] [--collapse-field conv_id]
       |         [--facet-field role] [--min-doc-count 3]
@@ -325,12 +326,11 @@ object Main {
     * lifetime; the pins die with it. */
   private def serve(spark: SparkSession, index: String,
       opts: Map[String, String], out: String => Unit): Unit = {
-    val analyzer = checkAnalyzer(index, opts)
-    val k = opts.get("k").map(_.toInt).getOrElse(10)
-    val limit = opts.get("limit").map(_.toInt).getOrElse(20)
-    val searcher = Searcher(ParquetIndexStorage.read(spark, index), analyzer)
+    val searcher = Searcher(ParquetIndexStorage.read(spark, index),
+      checkAnalyzer(index, opts))
     searcher.serving(pinDocs = true,
       pinPostings = opts.get("pin-postings").exists(_.toBoolean))
+    val target = One(searcher)
     val src = opts.get("queries") match {
       case Some(f) => scala.io.Source.fromFile(f)
       case None    => scala.io.Source.stdin
@@ -346,14 +346,8 @@ object Main {
         mode match {
           case "count-and" => out(s"count\t${searcher.countMatches(query, And)}")
           case "count-or"  => out(s"count\t${searcher.countMatches(query, Or)}")
-          case "wand"   => printDocs(searcher.bm25TopKWand(query, k),
-            ranked = true, Seq("doc_ord"), out)
-          case "and"    => printDocs(searcher.matchQuery(query, And).limit(limit),
-            ranked = false, Seq("doc_ord"), out)
-          case "or"     => printDocs(searcher.matchQuery(query, Or).limit(limit),
-            ranked = false, Seq("doc_ord"), out)
-          case "phrase" => printDocs(searcher.phraseQuery(query).limit(limit),
-            ranked = false, Seq("doc_ord"), out)
+          case "wand" | "and" | "or" | "phrase" =>
+            printMode(searchModes(mode), target, Req(query, opts), out)
           case other    => out(s"error: unknown serve mode '$other'")
         }
         out(f"# ${(System.nanoTime() - t0) / 1e6}%.1f ms")
@@ -364,172 +358,185 @@ object Main {
     }
   }
 
+  /** One `search` invocation's query text and options. */
+  private[graft] final case class Req(query: String, opts: Map[String, String]) {
+    def int(key: String, default: Int): Int = opts.get(key).map(_.toInt).getOrElse(default)
+    def double(key: String, default: Double): Double =
+      opts.get(key).map(_.toDouble).getOrElse(default)
+    def k: Int = int("k", 10)
+    def limit: Int = int("limit", 20)
+    def slop: Int = int("slop", 0)
+    def required(key: String, why: String): String =
+      opts.getOrElse(key, throw new IllegalArgumentException(why))
+  }
+
+  /** One search mode. Doc-row modes print document rows (with the score
+    * when `ranked`, see [[printMode]]); the others print every column of
+    * their frame, doubles at `decimals` places. `federated = false` modes
+    * need the single index's docs store. */
+  private[graft] final case class Mode(docRows: Boolean, ranked: Boolean = false,
+      decimals: Option[Int] = None, federated: Boolean = true)(
+      val run: (Target, Req) => DataFrame)
+
+  /** Every `search --mode`, for one index and a federation alike. */
+  private[graft] val searchModes: ListMap[String, Mode] = {
+    def docs(ranked: Boolean)(run: (Target, Req) => DataFrame) =
+      Mode(docRows = true, ranked)(run)
+    def table(decimals: Option[Int] = None, federated: Boolean = true)(
+        run: (Target, Req) => DataFrame) =
+      Mode(docRows = false, decimals = decimals, federated = federated)(run)
+    ListMap(
+      "and"    -> docs(ranked = false)((t, r) => t.q.matchQuery(r.query, And).limit(r.limit)),
+      "or"     -> docs(ranked = false)((t, r) => t.q.matchQuery(r.query, Or).limit(r.limit)),
+      "phrase" -> docs(ranked = false)((t, r) =>
+        t.q.phraseQuery(r.query, slop = r.slop).limit(r.limit)),
+      "phrase-prefix" -> docs(ranked = false)((t, r) =>
+        t.q.matchPhrasePrefix(r.query, slop = r.slop).limit(r.limit)),
+      "msm"    -> docs(ranked = false)((t, r) =>
+        t.msm(r.query, r.int("min-match", 2)).limit(r.limit)),
+      "tfidf"  -> docs(ranked = true)((t, r) => t.q.matchQueryRanked(r.query, Or).limit(r.k)),
+      "bm25"   -> docs(ranked = true)((t, r) => t.q.bm25TopK(r.query, r.k)),
+      "lm"     -> docs(ranked = true)((t, r) => t.q.lmDirichletTopK(r.query, r.k, r.double("mu", 2000.0))),
+      "wand"   -> docs(ranked = true)((t, r) => t.q.bm25TopKWand(r.query, r.k)),
+      "collapse" -> docs(ranked = true)((t, r) => t.q.bm25TopKCollapse(r.query,
+        r.opts.getOrElse("collapse-field", "conv_id"), r.k)),
+      "all"    -> docs(ranked = false)((t, r) => t.q.matchAll().limit(r.limit)),
+      // Lucene-lite query-string syntax (AND/OR/NOT, -term, parens,
+      // "quoted phrases"), unranked or positive-clause BM25
+      "qs"     -> docs(ranked = false)((t, r) => t.q.queryString(r.query).limit(r.limit)),
+      "qs-ranked" -> docs(ranked = true)((t, r) =>
+        t.q.queryString(r.query, ranked = true).limit(r.k)),
+      // dictionary expansions (a federation expands over its merged vocabulary)
+      "prefix" -> docs(ranked = false)((t, r) => t.q.prefixQuery(r.query).limit(r.limit)),
+      "fuzzy"  -> docs(ranked = false)((t, r) =>
+        t.q.fuzzyQuery(r.query, maxEdits = r.int("max-edits", 1)).limit(r.limit)),
+      "wildcard" -> docs(ranked = false)((t, r) => t.q.wildcardQuery(r.query).limit(r.limit)),
+      "regexp" -> docs(ranked = false)((t, r) => t.q.regexpQuery(r.query).limit(r.limit)),
+      "range"  -> docs(ranked = false) { (t, r) => // --query "lo,hi"; empty side = open end
+        val bounds = r.query.split(",", -1)
+        require(bounds.length == 2, s"range query must be 'lo,hi' (got '${r.query}')")
+        t.q.termRangeQuery(bounds(0), bounds(1)).limit(r.limit)
+      },
+      "rescore" -> docs(ranked = true)((t, r) => t.q.bm25TopKRescore(r.query,
+        r.required("rescore-phrase", "rescore needs --rescore-phrase"),
+        windowSize = r.int("window-size", 100), k = r.k,
+        rescoreWeight = r.double("rescore-weight", 1.0),
+        slop = r.slop)),
+      // modes addressing one document: a doc_ord for one index,
+      // comma-separated key values for a federation
+      "mlt"    -> docs(ranked = true)((t, r) => t.moreLikeThis(r.query, r.k)),
+      // one doc's indexed view (ES _termvectors) and per-term BM25
+      // breakdown (ES _explain: --query is the keyword, --doc the document)
+      "termvectors" -> table()((t, r) => t.termVectors(r.query)),
+      "explain" -> table(Some(6))((t, r) => t.explainScore(r.query,
+        r.required("doc", "explain needs --doc <doc_ord, or key values for a federation>"))),
+      "highlight" -> table()((t, r) => t.q.highlightTerms(r.query, Or).limit(r.limit)
+        .select((t.keyCols :+ "hit_terms").map(col): _*)),
+      "snippet" -> table()((t, r) => t.q.snippet(r.query, r.int("window", 2)).limit(r.limit)
+        .select((t.keyCols ++ Seq("first_pos", "snippet")).map(col): _*)),
+      "suggest" -> table()((t, r) => t.q.suggest(r.query, n = r.k)),
+      "dym"    -> table()((t, r) =>
+        t.q.didYouMean(r.query, maxEdits = r.int("max-edits", 2), n = r.k)),
+      "facets" -> table() { (t, r) =>
+        val field = r.opts.getOrElse("facet-field", "role")
+        t.q.facetCounts(r.query, Or, field).orderBy(col("n_docs").desc, col(field))
+      },
+      "sigterms" -> table(Some(4))((t, r) => t.q.significantTerms(r.query, Or, topN = r.k,
+        minDocCount = r.opts.get("min-doc-count").map(_.toLong).getOrElse(3L))),
+      "context" -> table(federated = false)((t, r) => context(t.single.get, r)))
+  }
+
+  /** Conversation windows around the BM25 top-k: the transcripts serving
+    * shape — retrieve, then feed each hit's ±window surrounding turns (RAG
+    * context) downstream. Conversations sliced by time can span slices, so
+    * a federation does not serve it. */
+  private def context(s: Searcher, r: Req): DataFrame = {
+    require(Seq("conv_id", "turn_idx").forall(s.index.docs.columns.contains),
+      "context mode needs conv_id/turn_idx docs columns (build from a transcripts table)")
+    s.contextWindows(s.bm25TopK(r.query, r.k).select("doc_ord"), "conv_id", "turn_idx",
+        r.int("window", 2))
+      .orderBy(col("hit_ord"), col("offset"))
+      .select("hit_ord", "offset", "conv_id", "turn_idx", "text")
+  }
+
   private def search(spark: SparkSession, index: String, query: String,
       opts: Map[String, String], out: String => Unit): Unit = {
-    if (index.contains(",")) { // --index a,b,c → scatter-gather federation
-      fedSearch(spark, index.split(',').map(_.trim).filter(_.nonEmpty).toSeq,
-        query, opts, out)
-      return
-    }
-    val analyzer = checkAnalyzer(index, opts)
-    val k = opts.get("k").map(_.toInt).getOrElse(10)
-    val limit = opts.get("limit").map(_.toInt).getOrElse(20)
-    val searcher = Searcher(ParquetIndexStorage.read(spark, index), analyzer)
-    val mode = opts.getOrElse("mode", "wand")
-    if (mode == "suggest") { // autocomplete: (term, df), not doc rows
-      out(Seq("term", "df").mkString("\t"))
-      searcher.suggest(query, n = k).collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}"))
-      return
-    }
-    if (mode == "dym") { // did-you-mean: (term, df, distance), not doc rows
-      out(Seq("term", "df", "distance").mkString("\t"))
-      searcher.didYouMean(query,
-        maxEdits = opts.get("max-edits").map(_.toInt).getOrElse(2), n = k)
-        .collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getInt(2)}"))
-      return
-    }
-    if (mode == "facets") { // matched-set facet counts over a docs column
-      val field = opts.getOrElse("facet-field", "role")
-      out(Seq(field, "n_docs").mkString("\t"))
-      searcher.facetCounts(query, Or, field)
-        .orderBy(col("n_docs").desc, col(field)).collect()
-        .foreach(r => out(s"${r.get(0)}\t${r.getLong(1)}"))
-      return
-    }
-    if (mode == "context") { // conversation windows around the BM25 top-k:
-      // the transcripts serving shape — retrieve, then feed each hit's
-      // ±window surrounding turns (RAG context) downstream
-      val docsCols = searcher.index.docs.columns
-      require(Seq("conv_id", "turn_idx").forall(docsCols.contains),
-        "context mode needs conv_id/turn_idx docs columns (build from a transcripts table)")
-      val w = opts.get("window").map(_.toInt).getOrElse(2)
-      val hits = searcher.bm25TopK(query, k).select("doc_ord")
-      val cols = Seq("hit_ord", "offset", "conv_id", "turn_idx", "text")
-      out(cols.mkString("\t"))
-      searcher.contextWindows(hits, "conv_id", "turn_idx", w)
-        .orderBy(col("hit_ord"), col("offset"))
-        .select(cols.map(col): _*).collect()
-        .foreach(r => out(cols.indices.map(i => String.valueOf(r.get(i))).mkString("\t")))
-      return
-    }
-    if (mode == "sigterms") { // significant terms of the matched set
-      out(Seq("term", "df_in", "df", "lift").mkString("\t"))
-      searcher.significantTerms(query, Or, topN = k,
-        minDocCount = opts.get("min-doc-count").map(_.toLong).getOrElse(3L))
-        .collect()
-        .foreach(r => out(f"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t${r.getDouble(3)}%.4f"))
-      return
-    }
-    if (mode == "termvectors") { // one doc's indexed view (ES _termvectors)
-      out(Seq("term", "tf", "positions").mkString("\t"))
-      searcher.termVectors(query.trim.toLong).collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getString(2)}"))
-      return
-    }
-    if (mode == "highlight") { // which query terms each matched doc contains
-      printCols(searcher.highlightTerms(query, Or).limit(limit),
-        Seq("doc_ord", "hit_terms"), out)
-      return
-    }
-    if (mode == "snippet") { // ±window tokens around the first hit
-      printCols(searcher.snippet(query,
-        opts.get("window").map(_.toInt).getOrElse(2)).limit(limit),
-        Seq("doc_ord", "first_pos", "snippet"), out)
-      return
-    }
-    if (mode == "explain") { // per-term BM25 breakdown (ES _explain):
-      // --query is the keyword, --doc the ordinal
-      val docOrd = opts.getOrElse("doc",
-        throw new IllegalArgumentException("explain needs --doc <doc_ord>")).toLong
-      out(Seq("term", "tf", "df", "idf", "tf_factor", "contribution").mkString("\t"))
-      searcher.explainScore(query, docOrd).collect().foreach(r =>
-        out(f"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t" +
-          f"${r.getDouble(3)}%.6f\t${r.getDouble(4)}%.6f\t${r.getDouble(5)}%.6f"))
-      return
-    }
-    val (df, ranked): (DataFrame, Boolean) = mode match {
-      case "and"    => (searcher.matchQuery(query, And).limit(limit), false)
-      case "or"     => (searcher.matchQuery(query, Or).limit(limit), false)
-      case "phrase" => (searcher.phraseQuery(query,
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)).limit(limit), false)
-      case "phrase-prefix" => (searcher.matchPhrasePrefix(query,
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)).limit(limit), false)
-      case "wildcard" => (searcher.wildcardQuery(query).limit(limit), false)
-      case "regexp"   => (searcher.regexpQuery(query).limit(limit), false)
-      case "range"    => // --query "lo,hi"; empty side = open end
-        (searcher.termRangeQuery(rangeLo(query), rangeHi(query)).limit(limit), false)
-      case "rescore" => (searcher.bm25TopKRescore(query,
-        opts.getOrElse("rescore-phrase", throw new IllegalArgumentException(
-          "rescore needs --rescore-phrase")),
-        windowSize = opts.get("window-size").map(_.toInt).getOrElse(100), k = k,
-        rescoreWeight = opts.get("rescore-weight").map(_.toDouble).getOrElse(1.0),
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)), true)
-      case "msm"    => (searcher.matchQueryMsm(query,
-        opts.get("min-match").map(_.toInt).getOrElse(2)).limit(limit), false)
-      case "tfidf"  => (searcher.matchQueryRanked(query, Or).limit(k), true)
-      case "bm25"   => (searcher.bm25TopK(query, k), true)
-      case "lm"     => (searcher.lmDirichletTopK(query, k,
-        opts.get("mu").map(_.toDouble).getOrElse(2000.0)), true)
-      case "wand"   => (searcher.bm25TopKWand(query, k), true)
-      case "collapse" => (searcher.bm25TopKCollapse(query,
-        opts.getOrElse("collapse-field", "conv_id"), k), true)
-      case "all"    => (searcher.matchAll().limit(limit), false)
-      // compound surface: Lucene-lite query-string syntax (AND/OR/NOT,
-      // -term, parens, "quoted phrases"), unranked or positive-clause BM25
-      case "qs"        => (searcher.queryString(query).limit(limit), false)
-      case "qs-ranked" => (searcher.queryString(query, ranked = true).limit(k), true)
-      case "prefix" => (searcher.prefixQuery(query).limit(limit), false)
-      case "fuzzy"  => (searcher.fuzzyQuery(query,
-        maxEdits = opts.get("max-edits").map(_.toInt).getOrElse(1)).limit(limit), false)
-      case "mlt"    => (searcher.moreLikeThis(query.trim.toLong, k = k), true)
-      case other    => throw new IllegalArgumentException(s"unknown mode '$other'")
-    }
-    printDocs(df, ranked, Seq("doc_ord"), out)
+    val name = opts.getOrElse("mode", "wand")
+    val mode = searchModes.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown mode '$name'"))
+    if (index.contains(",") && !mode.federated)
+      throw new IllegalArgumentException(s"mode '$name' is not federated; use " +
+        searchModes.filter(_._2.federated).keys.mkString("|") +
+        " with comma-separated --index")
+    printMode(mode, targetOf(spark, index, opts), Req(query, opts), out)
   }
 
-  /** `lo,hi` range bounds for `--mode range`; an empty side = open end. */
-  private def rangeLo(q: String): String = q.split(",", -1).headOption.getOrElse("")
-  private def rangeHi(q: String): String = {
-    val parts = q.split(",", -1)
-    require(parts.length == 2, s"range query must be 'lo,hi' (got '$q')")
-    parts(1)
-  }
-
-  /** Fixed-column TSV printer for table-shaped modes. */
-  private def printCols(df: DataFrame, cols: Seq[String],
+  /** TSV of every column of a table-shaped mode's frame; doubles at
+    * `decimals` places when given. */
+  private def printTable(df: DataFrame, decimals: Option[Int],
       out: String => Unit): Unit = {
-    out(cols.mkString("\t"))
-    df.select(cols.map(col): _*).collect().foreach { r =>
-      out(cols.indices.map(i => String.valueOf(r.get(i))).mkString("\t"))
+    out(df.columns.mkString("\t"))
+    df.collect().foreach { r =>
+      out(r.toSeq.map {
+        case d: Double if decimals.isDefined => s"%.${decimals.get}f".format(d)
+        case v => String.valueOf(v)
+      }.mkString("\t"))
     }
   }
 
-  /** Shared doc-row printer: key columns, then score for ranked modes,
-    * then any of the transcript columns present and not already printed. */
-  private def printDocs(df: DataFrame, ranked: Boolean, keyCols: Seq[String],
-      out: String => Unit): Unit = {
-    val cols = keyCols ++ (if (ranked) Seq("score") else Nil) ++
+  /** A mode's rows as printed: doc-row modes show the key columns, then
+    * the score when ranked, then any transcript columns present. */
+  private def printMode(mode: Mode, t: Target, r: Req, out: String => Unit): Unit = {
+    val df = mode.run(t, r)
+    val cols = t.keyCols ++ (if (mode.ranked) Seq("score") else Nil) ++
       Seq("conv_id", "turn_idx", "text")
-        .filter(c => df.columns.contains(c) && !keyCols.contains(c))
-    out(cols.mkString("\t"))
-    df.select(cols.map(col): _*).collect().foreach { r =>
-      out(cols.indices.map(i => String.valueOf(r.get(i))).mkString("\t"))
-    }
+        .filter(c => df.columns.contains(c) && !t.keyCols.contains(c))
+    printTable(if (mode.docRows) df.select(cols.map(col): _*) else df, mode.decimals, out)
   }
 
-  /** Scatter-gather search over several independently built persisted
-    * indexes (`--index a,b,c` — time slices or shards): global BM25
-    * statistics are merged across slices ([[graft.query.Federation]]), so
+  /** What `search`, `batch` and `serve` run against: the shared query
+    * surface, the key columns its rows print by, and document addressing —
+    * a doc_ord for one index, comma-separated key values for a federation.
+    * `msm` is bound here too: the searcher's takes an extra `ranked`. */
+  private[graft] sealed trait Target {
+    def q: QueryTarget
+    def keyCols: Seq[String]
+    def single: Option[Searcher] = None
+    def msm(query: String, n: Int): DataFrame
+    def moreLikeThis(doc: String, k: Int): DataFrame
+    def termVectors(doc: String): DataFrame
+    def explainScore(query: String, doc: String): DataFrame
+  }
+
+  private final case class One(q: Searcher) extends Target {
+    val keyCols: Seq[String] = Seq("doc_ord")
+    override def single: Option[Searcher] = Some(q)
+    def msm(query: String, n: Int): DataFrame = q.matchQueryMsm(query, n)
+    def moreLikeThis(doc: String, k: Int): DataFrame = q.moreLikeThis(doc.trim.toLong, k = k)
+    def termVectors(doc: String): DataFrame = q.termVectors(doc.trim.toLong)
+    def explainScore(query: String, doc: String): DataFrame =
+      q.explainScore(query, doc.trim.toLong)
+  }
+
+  private final case class Fed(q: Federation, keyCols: Seq[String]) extends Target {
+    private def key(doc: String): Seq[Any] = doc.split(",").map(_.trim).toSeq
+    def msm(query: String, n: Int): DataFrame = q.matchQueryMsm(query, n)
+    def moreLikeThis(doc: String, k: Int): DataFrame = q.moreLikeThis(key(doc), k = k)
+    def termVectors(doc: String): DataFrame = q.termVectors(key(doc))
+    def explainScore(query: String, doc: String): DataFrame = q.explainScore(query, key(doc))
+  }
+
+  /** `--index <path>` opens one index; `--index a,b,c` federates
+    * independently built slices (time slices or shards): global BM25
+    * statistics are merged across them ([[graft.query.Federation]]), so
     * results are rank-identical to one monolithic index over the union
-    * corpus. Results carry the slices' key columns instead of the
+    * corpus, keyed by the slices' stable key columns instead of the
     * slice-local doc_ord. */
-  /** Shared federation construction for the multi-`--index` search and
-    * batch paths: reads every slice, resolves the common stable key
-    * columns, and merges global statistics ([[graft.query.Federation]]). */
-  private def federationOf(spark: SparkSession, paths: Seq[String],
-      opts: Map[String, String]): (graft.query.Federation, Seq[String]) = {
+  private def targetOf(spark: SparkSession, index: String,
+      opts: Map[String, String]): Target = {
+    if (!index.contains(","))
+      return One(Searcher(ParquetIndexStorage.read(spark, index), checkAnalyzer(index, opts)))
+    val paths = index.split(',').map(_.trim).filter(_.nonEmpty).toSeq
     require(paths.size >= 2, "federated search needs at least two --index paths")
     val analyzer = paths.map(checkAnalyzer(_, opts)).head
     val slices = paths.map(ParquetIndexStorage.read(spark, _))
@@ -544,126 +551,13 @@ object Main {
         s"slices disagree on key columns: $other")
     }
     // paths enable the keymap-pruned home-slice key resolution for
-    // single-document modes (mlt): only the hashed key bucket is read
-    (graft.query.Federation.ofPersisted(slices, analyzer, keyCols, paths),
-      keyCols)
+    // single-document modes: only the hashed key bucket is read
+    Fed(Federation.ofPersisted(slices, analyzer, keyCols, paths), keyCols)
   }
 
-  private def fedSearch(spark: SparkSession, paths: Seq[String], query: String,
-      opts: Map[String, String], out: String => Unit): Unit = {
-    val (fed, keyCols) = federationOf(spark, paths, opts)
-    val k = opts.get("k").map(_.toInt).getOrElse(10)
-    val limit = opts.get("limit").map(_.toInt).getOrElse(20)
-    val mode = opts.getOrElse("mode", "wand")
-    if (mode == "suggest") { // merged-vocabulary autocomplete: (term, Σ df)
-      out(Seq("term", "df").mkString("\t"))
-      fed.suggest(query, n = k).collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}"))
-      return
-    }
-    if (mode == "dym") { // merged-vocabulary spell correction
-      out(Seq("term", "df", "distance").mkString("\t"))
-      fed.didYouMean(query,
-        maxEdits = opts.get("max-edits").map(_.toInt).getOrElse(2), n = k)
-        .collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getInt(2)}"))
-      return
-    }
-    if (mode == "facets") { // per-slice facet partials re-aggregated
-      val field = opts.getOrElse("facet-field", "role")
-      out(Seq(field, "n_docs").mkString("\t"))
-      fed.facetCounts(query, Or, field)
-        .orderBy(col("n_docs").desc, col(field)).collect()
-        .foreach(r => out(s"${r.get(0)}\t${r.getLong(1)}"))
-      return
-    }
-    if (mode == "sigterms") { // merged matched-set term frequencies,
-      // lift from global df/N — identical to the monolithic list
-      out(Seq("term", "df_in", "df", "lift").mkString("\t"))
-      fed.significantTerms(query, Or, topN = k,
-        minDocCount = opts.get("min-doc-count").map(_.toLong).getOrElse(3L))
-        .collect()
-        .foreach(r => out(
-          f"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t${r.getDouble(3)}%.4f"))
-      return
-    }
-    if (mode == "termvectors") { // one doc's indexed view, addressed by its
-      // stable key (comma-separated values matching the slices' key cols)
-      out(Seq("term", "tf", "positions").mkString("\t"))
-      fed.termVectors(query.split(",").map(_.trim).toSeq).collect()
-        .foreach(r => out(s"${r.getString(0)}\t${r.getLong(1)}\t${r.getString(2)}"))
-      return
-    }
-    if (mode == "highlight") { // per-doc hit terms union losslessly
-      printCols(fed.highlightTerms(query, Or).limit(limit),
-        keyCols :+ "hit_terms", out)
-      return
-    }
-    if (mode == "snippet") { // first-hit windows are per-document
-      printCols(fed.snippet(query,
-        opts.get("window").map(_.toInt).getOrElse(2)).limit(limit),
-        keyCols ++ Seq("first_pos", "snippet"), out)
-      return
-    }
-    if (mode == "explain") { // federated _explain: idf from the merged
-      // global df, tf/dl from the doc's home slice — --doc takes the key
-      val key = opts.getOrElse("doc", throw new IllegalArgumentException(
-        "explain needs --doc <key[,key2…]>")).split(",").map(_.trim).toSeq
-      out(Seq("term", "tf", "df", "idf", "tf_factor", "contribution").mkString("\t"))
-      fed.explainScore(query, key).collect().foreach(r =>
-        out(f"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t" +
-          f"${r.getDouble(3)}%.6f\t${r.getDouble(4)}%.6f\t${r.getDouble(5)}%.6f"))
-      return
-    }
-    val (df, ranked): (DataFrame, Boolean) = mode match {
-      case "and"    => (fed.matchQuery(query, And).limit(limit), false)
-      case "or"     => (fed.matchQuery(query, Or).limit(limit), false)
-      case "phrase" => (fed.phraseQuery(query,
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)).limit(limit), false)
-      case "bm25"   => (fed.bm25TopK(query, k), true)
-      case "wand"   => (fed.bm25TopKWand(query, k), true)
-      case "all"    => (fed.matchAll().limit(limit), false)
-      case "tfidf"  => (fed.matchQueryRanked(query, Or).limit(k), true)
-      case "lm"     => (fed.lmDirichletTopK(query, k,
-        opts.get("mu").map(_.toDouble).getOrElse(2000.0)), true)
-      case "msm"    => (fed.matchQueryMsm(query,
-        opts.get("min-match").map(_.toInt).getOrElse(2)).limit(limit), false)
-      case "collapse" => (fed.bm25TopKCollapse(query,
-        opts.getOrElse("collapse-field", "conv_id"), k), true)
-      // boolean trees: membership is per-doc (union); ranked mode scores
-      // with the merged global df injected per slice
-      case "qs"        => (fed.queryString(query).limit(limit), false)
-      case "qs-ranked" => (fed.queryString(query, ranked = true).limit(k), true)
-      // global-vocabulary expansion: the expansion set and df ordering come
-      // from the MERGED slice dictionaries, matching a monolithic index
-      case "prefix" => (fed.prefixQuery(query).limit(limit), false)
-      case "fuzzy"  => (fed.fuzzyQuery(query,
-        opts.get("max-edits").map(_.toInt).getOrElse(1)).limit(limit), false)
-      case "phrase-prefix" => (fed.matchPhrasePrefix(query,
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)).limit(limit), false)
-      // more-like-this: the source doc is addressed by its stable key
-      // (comma-separated values matching the slices' key columns)
-      case "mlt" =>
-        (fed.moreLikeThis(query.split(",").map(_.trim).toSeq, k = k), true)
-      case "wildcard" => (fed.wildcardQuery(query).limit(limit), false)
-      case "regexp"   => (fed.regexpQuery(query).limit(limit), false)
-      case "range"    =>
-        (fed.termRangeQuery(rangeLo(query), rangeHi(query)).limit(limit), false)
-      case "rescore" => (fed.bm25TopKRescore(query,
-        opts.getOrElse("rescore-phrase", throw new IllegalArgumentException(
-          "rescore needs --rescore-phrase")),
-        windowSize = opts.get("window-size").map(_.toInt).getOrElse(100), k = k,
-        rescoreWeight = opts.get("rescore-weight").map(_.toDouble).getOrElse(1.0),
-        slop = opts.get("slop").map(_.toInt).getOrElse(0)), true)
-      case other => throw new IllegalArgumentException(
-        s"mode '$other' is not federated; use and|or|phrase|phrase-prefix|" +
-          "msm|tfidf|bm25|lm|wand|collapse|all|qs|qs-ranked|prefix|fuzzy|" +
-          "wildcard|regexp|range|rescore|mlt|termvectors|explain|highlight|" +
-          "snippet|suggest|dym|facets|sigterms with comma-separated --index")
-    }
-    printDocs(df, ranked, keyCols, out)
-  }
-
+  /** `batch`: the query set as ONE plan per index ([[QueryTarget.bm25TopKBatch]]);
+    * a federation runs it per slice with global idf/avgdl and one gather
+    * window — ranks and scores identical to a monolithic index. */
   private def batchSearch(spark: SparkSession, index: String, queriesFile: String,
       opts: Map[String, String], out: String => Unit): Unit = {
     val k = opts.get("k").map(_.toInt).getOrElse(10)
@@ -672,35 +566,16 @@ object Main {
                   finally src.close()
     }
     require(queries.nonEmpty, s"no queries in $queriesFile")
-    if (index.contains(",")) { // --index a,b,c → federated query-set replay:
-      // one slot broadcast + pruned scan + per-query cut PER SLICE with
-      // global idf/avgdl, one gather window — ranks/scores identical to a
-      // monolithic index over the union corpus
-      val paths = index.split(',').map(_.trim).filter(_.nonEmpty).toSeq
-      val (fed, keyCols) = federationOf(spark, paths, opts)
-      val df = opts.getOrElse("mode", "wand") match {
-        case "wand" => fed.bm25TopKBatchWand(queries, k)
-        case "bm25" => fed.bm25TopKBatch(queries, k)
-        case other  => throw new IllegalArgumentException(s"unknown batch mode '$other'")
-      }
-      out((Seq("q_id", "query", "rank") ++ keyCols :+ "score").mkString("\t"))
-      df.orderBy(col("q_id"), col("rank")).collect().foreach { r =>
-        val key = keyCols.indices.map(i => r.get(2 + i))
-        out((Seq(r.get(0), queries(r.getAs[Number](0).intValue), r.get(1)) ++
-          key :+ r.get(keyCols.size + 2)).map(String.valueOf).mkString("\t"))
-      }
-      return
-    }
-    val analyzer = checkAnalyzer(index, opts)
-    val searcher = Searcher(ParquetIndexStorage.read(spark, index), analyzer)
+    val t = targetOf(spark, index, opts)
     val df = opts.getOrElse("mode", "wand") match {
-      case "wand" => searcher.bm25TopKBatchWand(queries, k)
-      case "bm25" => searcher.bm25TopKBatch(queries, k)
+      case "wand" => t.q.bm25TopKBatchWand(queries, k)
+      case "bm25" => t.q.bm25TopKBatch(queries, k)
       case other  => throw new IllegalArgumentException(s"unknown batch mode '$other'")
     }
-    out(Seq("q_id", "query", "rank", "doc_ord", "score").mkString("\t"))
+    // rows are (q_id, rank, key columns…, score)
+    out((Seq("q_id", "query", "rank") ++ t.keyCols :+ "score").mkString("\t"))
     df.orderBy(col("q_id"), col("rank")).collect().foreach { r =>
-      out(Seq(r.get(0), queries(r.getAs[Number](0).intValue), r.get(1), r.get(2), r.get(3))
+      out((r.get(0) +: queries(r.getAs[Number](0).intValue) +: r.toSeq.tail)
         .map(String.valueOf).mkString("\t"))
     }
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Per-partition bounded top-k pre-selection for "rank window then keep
   * rank <= k" plans (guide §2.3 "shuffle fewer bytes", §2.4: the window's
@@ -31,11 +32,16 @@ object TopK {
   /** `df` reduced to at most k rows per `keyCol` value PER PARTITION, by
     * (`scoreCol` desc, `tieCol` asc) — a superset of the global per-key
     * top-k, to be fed to the exact final rank window. `tieCol` must be
-    * unique within a key (it is the rank tie-break). Schema unchanged. */
+    * unique within a key (it is the rank tie-break). Schema unchanged.
+    * The heap compares a double score and a long tie; other column types
+    * are checked here on the driver and get `df` back unpruned (the final
+    * window then ranks every row, as without the prune). */
   private[graft] def prunePerKey(df: DataFrame, keyCol: String,
       scoreCol: String, tieCol: String, k: Int): DataFrame = {
     if (k <= 0) return df.limit(0)
     val schema = df.schema
+    if (schema(scoreCol).dataType != DoubleType || schema(tieCol).dataType != LongType)
+      return df
     val ki = schema.fieldIndex(keyCol)
     val si = schema.fieldIndex(scoreCol)
     val ti = schema.fieldIndex(tieCol)
@@ -60,7 +66,8 @@ object TopK {
           if (r.isNullAt(si)) 0.0 else r.getDouble(si) + 0.0,
           r.getLong(ti), r)
         val heap = heaps.computeIfAbsent(r.get(ki),
-          _ => new java.util.PriorityQueue[Kept](k + 1, worstFirst))
+          // grows on demand: k may be Int.MaxValue ("no cut")
+          _ => new java.util.PriorityQueue[Kept](math.min(k, 1024) + 1, worstFirst))
         if (heap.size < k) heap.offer(kept)
         else if (worstFirst.compare(kept, heap.peek) > 0) {
           heap.poll(); heap.offer(kept)

@@ -4,6 +4,7 @@ import graft.analysis.Analyzer
 import graft.index.{BlockParams, TextIndex}
 import graft.storage.PersistedIndex
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scatter-gather search over a set of INDEPENDENTLY built index slices —
@@ -24,14 +25,24 @@ import org.apache.spark.sql.functions._
   * RANK-IDENTICAL (scores float-exact) to a monolithic index over the
   * union corpus — pinned in FederationSpec and the `ft_federated` oracle.
   *
-  * Scale shape per query: each slice contributes its own pruned postings
-  * scan and doc-level aggregation (the same plan the monolithic Searcher
-  * compiles, typically served from disjoint executors), top-k queries cut
-  * to k rows INSIDE each slice (TakeOrderedAndProject), and the gather
-  * phase merges ≤ slices·k rows — the union never re-sorts a corpus-sized
-  * set. Block-max WAND stays lossless under federation because block
-  * maxima are stored as `(max_tf, min_dl)` and the score bound is computed
-  * at query time from the injected global idf/avgdl.
+  * Every method is one of a few merge shapes (the local-top-k-then-global-
+  * merge design of REPOSE), each written once as a private combinator:
+  *  - [[gather]] / [[unionOrdered]] — union and order: per-slice
+  *    [[Searcher]] results (on the [[slicesWithGlobalStats]] views when
+  *    scores need global df), ordinal dropped, ordered
+  *    `(score desc,)? tieCols asc`, optionally cut to k. Top-k queries cut
+  *    to k rows INSIDE each slice, so the gather merges ≤ slices·k rows —
+  *    correct because a doc's global rank is never better than its slice
+  *    rank;
+  *  - [[resum]] / [[mergedDict]] — re-aggregate partials: facet buckets and
+  *    dictionary df summed per key, never doc rows;
+  *  - [[locate]] — home slice by stable key, for single-document reads;
+  *  - [[Federation.concurrently]] — the per-slice dictionary and key probes
+  *    run concurrently (serializing them at realistic slice counts stacks
+  *    scheduler latency ahead of any scoring work).
+  * Block-max WAND stays lossless under federation because block maxima are
+  * stored as `(max_tf, min_dl)` and the score bound is computed at query
+  * time from the injected global idf/avgdl.
   *
   * Doc ordinals are slice-local, so federated results expose the caller's
   * stable key columns (`tieCols`, e.g. `doc_id` or `conv_id, turn_idx`)
@@ -47,46 +58,54 @@ import org.apache.spark.sql.functions._
 final class Federation private (
     val sliceSearchers: Seq[Searcher],
     tieCols: Seq[String],
-    // keymap-pruned home-slice key resolution (persisted slices built with
-    // a keymap): reads only the hashed key bucket per slice instead of
-    // scanning docs — the web-scale [[locate]] path. None = generic
-    // docs-filter probe.
-    keyLookup: Option[Seq[Any] => Option[(Int, Long)]] = None
-) {
+    // keymap-pruned home-slice key probe (persisted slices built with a
+    // keymap): reads only the hashed key bucket per slice instead of
+    // scanning docs — the web-scale [[locate]] path; returns every
+    // (slice, ordinal) hit. None = generic docs-filter probe.
+    keyLookup: Option[Seq[Any] => Seq[(Int, Long)]] = None
+) extends QueryTarget {
   require(sliceSearchers.nonEmpty, "federation needs at least one slice")
   require(tieCols.nonEmpty, "federation needs at least one tie-break key column")
 
   private val analyzer: Analyzer = sliceSearchers.head.analyzer
   private def tieAsc = tieCols.map(asc)
+  private def scoreOrder = desc("score") +: tieAsc
+  private def termsOf(texts: String*): Seq[String] =
+    texts.flatMap(analyzer.terms(_)).distinct
 
   /** Per-slice resolved terms with the GLOBAL document frequency
     * substituted: slice-local term_id/bucket (postings pruning stays
     * slice-correct), df summed across every slice that knows the term.
     * Query order is preserved per slice; terms unknown to a slice are
     * absent from that slice's seq (they cannot match there). The per-slice
-    * dictionary lookups are independent vocab-sized collects, so they run
-    * CONCURRENTLY — at realistic slice counts (30 day-slices) serializing
-    * them would stack scheduler latency ahead of any scoring work. */
+    * lookups are independent vocab-sized collects and run concurrently. */
   private def resolveGlobal(terms: Seq[String]): Seq[Seq[ResolvedTerm]] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val perSlice: Seq[Map[String, ResolvedTerm]] = Await.result(
-      Future.sequence(sliceSearchers.map(s =>
-        Future(s.resolve(terms).map(rt => rt.term -> rt).toMap))),
-      Duration.Inf)
-    val globalDf: Map[String, Long] = terms.distinct.map { t =>
-      t -> perSlice.flatMap(_.get(t)).map(_.df).sum
+    val perSlice: Seq[Map[String, ResolvedTerm]] = Federation.concurrently(
+      sliceSearchers)(_.resolve(terms).map(rt => rt.term -> rt).toMap)
+    // (Σ df, Σ cf) per term; cf -1 (unknown in ANY slice dictionary)
+    // poisons the sum to "unknown" rather than a lie
+    val global: Map[String, (Long, Long)] = terms.distinct.map { t =>
+      val rts = perSlice.flatMap(_.get(t))
+      t -> ((rts.map(_.df).sum, if (rts.exists(_.cf < 0)) -1L else rts.map(_.cf).sum))
     }.toMap
-    // cf merges the same way df does (Σ slice cf); -1 (unknown in ANY
-    // slice dictionary) poisons the sum to "unknown" rather than a lie
-    val globalCf: Map[String, Long] = terms.distinct.map { t =>
-      val cfs = perSlice.flatMap(_.get(t)).map(_.cf)
-      t -> (if (cfs.exists(_ < 0)) -1L else cfs.sum)
-    }.toMap
-    perSlice.map { m =>
-      terms.flatMap(t => m.get(t).map(rt =>
-        rt.copy(df = globalDf(t), cf = globalCf(t))))
+    perSlice.map(m => terms.flatMap(t => m.get(t).map { rt =>
+      val (df, cf) = global(t)
+      rt.copy(df = df, cf = cf)
+    }))
+  }
+
+  /** Slices re-viewed with the corpus-wide statistics substituted for the
+    * given terms: every scoring surface on the returned searchers weighs
+    * with global statistics while postings pruning and term ids stay
+    * slice-local — the general federation hook behind dis_max / boosting /
+    * function_score / grouped / LM / rescore / paging. The views carry the
+    * FULL per-slice resolutions from [[resolveGlobal]]'s one concurrent
+    * pass ([[Searcher.withPreResolved]]), so per-slice query compilation
+    * runs ZERO further dictionary jobs for the covered terms. */
+  private def slicesWithGlobalStats(terms: Seq[String]): Seq[Searcher] = {
+    val covered = terms.toSet
+    sliceSearchers.zip(resolveGlobal(terms)).map { case (s, rts) =>
+      s.withPreResolved(covered, rts.map(rt => rt.term -> rt).toMap)
     }
   }
 
@@ -96,8 +115,48 @@ final class Federation private (
     if (withScore) base.withColumn("score", lit(0.0)) else base
   }
 
-  private def unionAll(parts: Seq[DataFrame]): Option[DataFrame] =
-    parts.reduceOption(_ unionByName _)
+  // ------------------------------------------------- gather combinators
+
+  private def union(parts: Seq[DataFrame]): DataFrame = parts.reduce(_ unionByName _)
+
+  /** Union and order: per-slice frames ordered `(score desc,)? tieCols asc`
+    * (or by `order` when given), cut to `k` when given; the schema-only
+    * empty frame when no slice contributes. */
+  private def unionOrdered(parts: Seq[DataFrame], ranked: Boolean,
+      k: Option[Int] = None, order: Seq[Column] = Nil): DataFrame =
+    parts.reduceOption(_ unionByName _) match {
+      case None => emptyDocs(ranked)
+      case Some(all) =>
+        val by = if (order.nonEmpty) order else if (ranked) scoreOrder else tieAsc
+        val sorted = all.orderBy(by: _*)
+        k.fold(sorted)(sorted.limit)
+    }
+
+  /** [[unionOrdered]] over one [[Searcher]] call per slice — on the
+    * global-stats views of `global`'s terms when given — ordinal dropped. */
+  private def gather(ranked: Boolean, k: Option[Int] = None,
+      global: Option[Seq[String]] = None, order: Seq[Column] = Nil)(
+      call: Searcher => DataFrame): DataFrame =
+    unionOrdered(global.fold(sliceSearchers)(slicesWithGlobalStats)
+      .map(call(_).drop("doc_ord")), ranked, k, order)
+
+  /** `f` on every slice that resolves at least one of its terms. */
+  private def resolvedSlices(rtss: Seq[Seq[ResolvedTerm]])(
+      f: (Searcher, Seq[ResolvedTerm]) => DataFrame): Seq[DataFrame] =
+    sliceSearchers.zip(rtss).collect { case (s, rts) if rts.nonEmpty => f(s, rts) }
+
+  /** Re-aggregate partials: per-slice partial sums of `value` merged per
+    * `key` — the gather carries partial-sized rows, never docs. */
+  private def resum(parts: Seq[DataFrame], key: String, value: String): DataFrame =
+    union(parts).groupBy(col(key)).agg(sum(col(value)).as(value))
+
+  /** The merged dictionary: `(term, Σ slice df)` of the terms matching
+    * `pred` — one distributed plan over the vocab-sized dictionaries; no
+    * slice vocabulary is collected. A slice-exclusive term keeps its true
+    * global frequency. */
+  private def mergedDict(pred: Column): DataFrame =
+    resum(sliceSearchers.map(
+      _.index.termDict.filter(pred).select(col("term"), col("df"))), "term", "df")
 
   /** Scored docs (docs columns + `score`) from one slice: the slice's
     * pruned-postings BM25 aggregation with global weights, joined to the
@@ -107,39 +166,29 @@ final class Federation private (
       .join(s.scoredMatches(rts, s.bm25Expr).select("doc_ord", "score"), "doc_ord")
       .drop("doc_ord")
 
+  private def cut(df: DataFrame, k: Int): DataFrame =
+    df.orderBy(scoreOrder: _*).limit(k)
+
+  // ------------------------------------------------------- BM25 ranking
+
   /** All matched docs with GLOBAL-stats BM25 scores (no top-k) — the
     * federated twin of [[Searcher.bm25All]], float-exact to the monolithic
     * scores. (score desc, tieCols asc). */
-  def bm25All(keyword: String): DataFrame = {
-    val rtss = resolveGlobal(analyzer.terms(keyword).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty => slicedScores(s, rts)
-    }
-    unionAll(parts) match {
-      case None      => emptyDocs(withScore = true)
-      case Some(all) => all.orderBy(desc("score") +: tieAsc: _*)
-    }
-  }
+  def bm25All(keyword: String): DataFrame =
+    unionOrdered(resolvedSlices(resolveGlobal(termsOf(keyword)))(slicedScores),
+      ranked = true)
 
   /** Federated BM25 top-k: each slice cuts to its own k
     * (TakeOrderedAndProject inside the slice), the gather merges
-    * ≤ slices·k rows — correct because a doc's global rank is never better
-    * than its slice rank. Rank-identical to the monolithic top-k up to the
+    * ≤ slices·k rows. Rank-identical to the monolithic top-k up to the
     * tie-break key (see class doc). */
-  def bm25TopK(keyword: String, k: Int): DataFrame = {
-    val rtss = resolveGlobal(analyzer.terms(keyword).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        slicedScores(s, rts).orderBy(desc("score") +: tieAsc: _*).limit(k)
-    }
-    unionAll(parts) match {
-      case None      => emptyDocs(withScore = true)
-      case Some(all) => all.orderBy(desc("score") +: tieAsc: _*).limit(k)
-    }
-  }
+  def bm25TopK(keyword: String, k: Int): DataFrame =
+    unionOrdered(resolvedSlices(resolveGlobal(termsOf(keyword)))(
+      (s, rts) => cut(slicedScores(s, rts), k)), ranked = true, Some(k))
 
   /** Federated block-max WAND top-k — rank-identical to [[bm25TopK]]:
-    * per-slice WAND over the slice's block table with GLOBAL idf/avgdl
+    * per-slice WAND over the slice's block table (persisted slices read
+    * only the query terms' `t_bucket` leaves) with GLOBAL idf/avgdl
     * injected (bounds recomputed from the stored `(max_tf, min_dl)`, so
     * pruning stays lossless under federated stats), per-slice k cut,
     * ≤ slices·k gather. One shared `metrics` accumulates skip rates
@@ -153,21 +202,43 @@ final class Federation private (
     * with ordinals out of key order can keep a different member of an
     * exact-score tie straddling the boundary. */
   def bm25TopKWand(keyword: String, k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame = {
-    val rtss = resolveGlobal(analyzer.terms(keyword).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val weights = rts.map(rt => rt.termId -> s.bm25Idf(rt.df)).toMap
-        s.index.docs
-          .join(BlockMaxWand.topK(s.blocks, weights, k, s.blockParams,
-            s.index.avgDocLen, metrics), "doc_ord")
-          .drop("doc_ord")
-          .orderBy(desc("score") +: tieAsc: _*)
-          .limit(k)
+      metrics: Option[WandMetrics] = None): DataFrame =
+    unionOrdered(resolvedSlices(resolveGlobal(termsOf(keyword))) { (s, rts) =>
+      val weights = rts.map(rt => rt.termId -> s.bm25Idf(rt.df)).toMap
+      cut(s.index.docs
+        .join(BlockMaxWand.topK(s.blocksFor(rts), weights, k, s.blockParams,
+          s.index.avgDocLen, metrics), "doc_ord")
+        .drop("doc_ord"), k)
+    }, ranked = true, Some(k))
+
+  private def byQuery = Window.partitionBy(col("q_id")).orderBy(scoreOrder: _*)
+
+  /** The batch merge: the set's `(q_id, term)` slots resolved once with
+    * global df; `f` runs per slice on its `(q_id, term_id, global idf)`
+    * slots and returns `(q_id, tieCols…, score)` rows already cut to k per
+    * query; one window over ≤ slices·queries·k rows cuts to k per q_id,
+    * projected to `(q_id, rank, tieCols…, score)`. */
+  private def batchTopK(keywords: Seq[String], k: Int)(
+      f: (Searcher, Seq[(Int, Long, Double)], Seq[ResolvedTerm]) => DataFrame): DataFrame = {
+    val qTerms = keywords.zipWithIndex.flatMap {
+      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
     }
-    unionAll(parts) match {
-      case None      => emptyDocs(withScore = true)
-      case Some(all) => all.orderBy(desc("score") +: tieAsc: _*).limit(k)
+    val parts = resolvedSlices(resolveGlobal(qTerms.map(_._2).distinct)) { (s, rts) =>
+      val byTerm = rts.map(rt => rt.term -> rt).toMap
+      f(s, qTerms.flatMap { case (qi, t) =>
+        byTerm.get(t).map(rt => (qi, rt.termId, s.bm25Idf(rt.df)))
+      }, rts)
+    }
+    val keyThenScore = tieCols.map(col) :+ col("score")
+    parts.reduceOption(_ unionByName _) match {
+      case None =>
+        emptyDocs(withScore = true)
+          .select(lit(0).as("q_id") +: lit(0L).as("rank") +: keyThenScore: _*)
+          .limit(0)
+      case Some(all) =>
+        all.withColumn("rank", row_number().over(byQuery))
+          .filter(col("rank") <= k)
+          .select(col("q_id") +: col("rank").cast("long").as("rank") +: keyThenScore: _*)
     }
   }
 
@@ -177,53 +248,14 @@ final class Federation private (
     * global idf weights, per-(slice, q_id) k cut, then one gather window
     * over ≤ slices·queries·k rows. Returns `(q_id, rank, tieCols…, score)`
     * — ranks and scores identical to the monolithic batch path. */
-  /** `(q_id, term)` slots for a batch query set, analyzer applied once. */
-  private def batchSlots(keywords: Seq[String]): Seq[(Int, String)] =
-    keywords.zipWithIndex.flatMap {
-      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
-    }
-
-  /** The shared batch gather: one window over ≤ slices·queries·k per-slice
-    * survivors, cut to k per q_id, projected to
-    * `(q_id, rank, tieCols…, score)`. */
-  private def gatherBatch(parts: Seq[DataFrame], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("score") +: tieAsc: _*)
-    val keyThenScore = (tieCols.map(col) :+ col("score")).toArray
-    unionAll(parts) match {
-      case None =>
-        emptyDocs(withScore = true)
-          .select(lit(0).as("q_id") +: lit(0L).as("rank") +: keyThenScore: _*)
-          .limit(0)
-      case Some(all) =>
-        all.withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("q_id") +: col("rank").cast("long").as("rank") +: keyThenScore: _*)
-    }
-  }
-
-  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qTerms = batchSlots(keywords)
-    val rtss = resolveGlobal(qTerms.map(_._2).distinct)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(desc("score") +: tieAsc: _*)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val byTerm = rts.map(rt => rt.term -> rt).toMap
-        val slots = qTerms.flatMap { case (qi, t) =>
-          byTerm.get(t).map(rt => (qi, rt.termId, s.bm25Idf(rt.df)))
-        }
-        s.index.docs
-          .join(s.batchScores(slots, byTerm.values.toSeq), "doc_ord")
-          .drop("doc_ord")
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .drop("rank")
-    }
-    gatherBatch(parts, k)
-  }
+  def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame =
+    batchTopK(keywords, k)((s, slots, rts) =>
+      s.index.docs
+        .join(s.batchScores(slots, rts), "doc_ord")
+        .drop("doc_ord")
+        .withColumn("rank", row_number().over(byQuery))
+        .filter(col("rank") <= k)
+        .drop("rank"))
 
   /** Federated batch BM25 top-k WITH block-max WAND pruning — the realistic
     * offline query-service shape across slices: per slice, ONE pruned
@@ -233,24 +265,15 @@ final class Federation private (
     * by WAND's heaps, one gather window. Rank-identical to
     * [[bm25TopKBatch]] (pinned in FederationSpec). */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame = {
-    val qTerms = batchSlots(keywords)
-    val rtss = resolveGlobal(qTerms.map(_._2).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val byTerm = rts.map(rt => rt.term -> rt).toMap
-        val queries: Map[Int, Map[Long, Double]] = qTerms
-          .flatMap { case (qi, t) =>
-            byTerm.get(t).map(rt => (qi, rt.termId, s.bm25Idf(rt.df))) }
-          .groupBy(_._1)
-          .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
-        s.index.docs
-          .join(BlockMaxWand.topKBatch(s.blocks, queries, k, s.blockParams,
-            s.index.avgDocLen, metrics).drop("rank"), "doc_ord")
-          .drop("doc_ord")
+      metrics: Option[WandMetrics] = None): DataFrame =
+    batchTopK(keywords, k) { (s, slots, rts) =>
+      val queries: Map[Int, Map[Long, Double]] = slots.groupBy(_._1)
+        .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
+      s.index.docs
+        .join(BlockMaxWand.topKBatch(s.blocksFor(rts), queries, k, s.blockParams,
+          s.index.avgDocLen, metrics).drop("rank"), "doc_ord")
+        .drop("doc_ord")
     }
-    gatherBatch(parts, k)
-  }
 
   // --------------------------- global-vocabulary dictionary expansion
 
@@ -259,20 +282,14 @@ final class Federation private (
     * index: the monolithic cap keeps the `maxExpansions` highest-GLOBAL-df
     * terms, and a term's global df can put it in the global top-M even when
     * it makes no slice's local top-M (df spread thinly across slices), or
-    * when it is known to only one slice. The merge is one distributed plan
-    * over the slices' vocab-sized dictionaries — union of per-slice
-    * dictionary scans, `groupBy(term).agg(sum(df))`, global
-    * (df desc, term asc) top-M cut — so only ≤ `maxExpansions` terms ever
-    * reach the driver; no slice vocabulary is collected. Ordering matches
-    * [[Searcher.expand]] exactly (Σ slice df == monolithic df), so the
-    * surviving expansion set is identical to the monolithic one. */
-  private def expandGlobal(pred: org.apache.spark.sql.Column,
-      maxExpansions: Int): Seq[String] = {
+    * when it is known to only one slice. The [[mergedDict]] is cut to the
+    * global (df desc, term asc) top-M, so only ≤ `maxExpansions` terms ever
+    * reach the driver. Ordering matches [[Searcher.expand]] exactly
+    * (Σ slice df == monolithic df), so the surviving expansion set is
+    * identical to the monolithic one. */
+  private def expandGlobal(pred: Column, maxExpansions: Int): Seq[String] = {
     require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
-    val parts = sliceSearchers.map(
-      _.index.termDict.filter(pred).select(col("term"), col("df")))
-    unionAll(parts).get
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
+    mergedDict(pred)
       .orderBy(desc("df"), asc("term"))
       .limit(maxExpansions)
       .select("term").collect().map(_.getString(0)).toSeq
@@ -282,29 +299,21 @@ final class Federation private (
     * GLOBAL df/cf substituted (so `ranked` TF-IDF weights are float-exact
     * to the monolithic scores), per-slice pruned postings scan + doc agg,
     * gather ordered (score desc,)? tieCols asc. */
-  private def matchExpandedGlobal(terms: Seq[String], ranked: Boolean): DataFrame = {
+  private def matchExpandedGlobal(pred: Column, maxExpansions: Int,
+      ranked: Boolean): DataFrame = {
+    val terms = expandGlobal(pred, maxExpansions)
     if (terms.isEmpty) return emptyDocs(ranked)
-    val rtss = resolveGlobal(terms)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty => s.matchExpanded(rts, ranked).drop("doc_ord")
-    }
-    unionAll(parts) match {
-      case None      => emptyDocs(ranked)
-      case Some(all) =>
-        if (ranked) all.orderBy(desc("score") +: tieAsc: _*)
-        else all.orderBy(tieAsc: _*)
-    }
+    unionOrdered(resolvedSlices(resolveGlobal(terms))(
+      _.matchExpanded(_, ranked).drop("doc_ord")), ranked)
   }
 
   /** Federated PrefixQuery — identical semantics to
     * [[Searcher.prefixQuery]] over the union corpus: global-vocabulary
     * expansion (see [[expandGlobal]]), then a per-slice OR match. */
   def prefixQuery(prefix: String, ranked: Boolean = false,
-      maxExpansions: Int = 128): DataFrame = {
-    if (prefix.isEmpty) return emptyDocs(ranked)
-    matchExpandedGlobal(
-      expandGlobal(col("term").startsWith(prefix), maxExpansions), ranked)
-  }
+      maxExpansions: Int = 128): DataFrame =
+    if (prefix.isEmpty) emptyDocs(ranked)
+    else matchExpandedGlobal(col("term").startsWith(prefix), maxExpansions, ranked)
 
   /** Federated FuzzyQuery — [[Searcher.fuzzyQuery]] over the union corpus:
     * the edit-distance expansion runs against the merged global vocabulary
@@ -314,120 +323,24 @@ final class Federation private (
     analyzer.terms(term).headOption match {
       case None    => emptyDocs(ranked)
       case Some(t) =>
-        matchExpandedGlobal(
-          expandGlobal(Searcher.fuzzyPred(t, maxEdits), maxExpansions), ranked)
+        matchExpandedGlobal(Searcher.fuzzyPred(t, maxEdits), maxExpansions, ranked)
     }
 
   /** Federated WildcardQuery (`*` any run, `?` one char, anchored). */
   def wildcardQuery(pattern: String, ranked: Boolean = false,
-      maxExpansions: Int = 128): DataFrame = {
-    if (pattern.isEmpty) return emptyDocs(ranked)
-    matchExpandedGlobal(
-      expandGlobal(col("term").rlike(Searcher.wildcardRegex(pattern)),
-        maxExpansions), ranked)
-  }
-
-  /** Federated autocomplete — [[Searcher.suggest]] over the union corpus:
-    * per-slice prefix scans merged with Σ df, global (df desc, term asc)
-    * top-n. A slice-exclusive completion still surfaces, with its true
-    * global frequency. */
-  def suggest(prefix: String, n: Int = 10): DataFrame = {
-    val parts = sliceSearchers.map(
-      _.index.termDict.filter(col("term").startsWith(prefix))
-        .select(col("term"), col("df")))
-    unionAll(parts).get
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .orderBy(desc("df"), asc("term"))
-      .limit(n)
-  }
-
-  /** Federated spell correction — [[Searcher.didYouMean]] over the union
-    * corpus: per-slice length-windowed dictionary scans merged with Σ df
-    * (the edit distance is a pure function of the term, so the per-term
-    * merge is exact), then ONE global (distance asc, df desc, term asc)
-    * top-n. A slice-exclusive candidate still surfaces, ranked by its true
-    * corpus-wide frequency — per-slice correction lists would diverge
-    * whenever candidates' local df ordering differs from the global one. */
-  def didYouMean(term: String, maxEdits: Int = 2, n: Int = 5): DataFrame = {
-    val normed = analyzer.terms(term).headOption
-    if (normed.isEmpty)
-      return sliceSearchers.head.index.termDict
-        .select(col("term"), col("df")).withColumn("distance", lit(0)).limit(0)
-    val t = normed.get
-    val parts = sliceSearchers.map(
-      _.index.termDict
-        .filter(length(col("term"))
-          .between(t.length - maxEdits, t.length + maxEdits) &&
-          col("term") =!= t)
-        .select(col("term"), col("df")))
-    unionAll(parts).get
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-      .withColumn("distance", levenshtein(col("term"), lit(t)))
-      .filter(col("distance") <= maxEdits)
-      .select(col("term"), col("df"), col("distance"))
-      .orderBy(asc("distance"), desc("df"), asc("term"))
-      .limit(n)
-  }
-
-  /** Term vectors of one document addressed by its stable key — tf and
-    * positions are properties of the document alone, so the home slice's
-    * view IS the union-index view; only the home slice is read. */
-  def termVectors(key: Seq[Any]): DataFrame =
-    locate(key) match {
-      case None           => sliceSearchers.head.termVectors(-1L).limit(0)
-      case Some((i, ord)) => sliceSearchers(i).termVectors(ord)
-    }
-
-  /** Per-term BM25 explanation with FEDERATED statistics: idf weighs with
-    * the merged global df (stats override), tf/dl come from the doc's home
-    * slice — the contributions sum to exactly the doc's federated
-    * [[bm25All]] score, the property the monolithic explain carries. */
-  def explainScore(keyword: String, key: Seq[Any]): DataFrame =
-    locate(key) match {
-      case None => sliceSearchers.head.explainScore(keyword, -1L).limit(0)
-      case Some((i, ord)) =>
-        slicesWithGlobalStats(analyzer.terms(keyword).distinct)(i)
-          .explainScore(keyword, ord)
-    }
-
-  /** Federated MatchAllQuery: every document of every slice, `tieCols`
-    * order (the monolithic doc_ord order coincides under the builder's
-    * stable-ordering contract). */
-  def matchAll(): DataFrame =
-    unionAll(sliceSearchers.map(_.matchAll().drop("doc_ord"))).get
-      .orderBy(tieAsc: _*)
-
-  /** Federated ranked MatchQuery (TF-IDF — the reference's sorter): each
-    * slice scores with the merged global df injected into its tf-idf
-    * weights (tf and doc length are doc-local), float-exact to monolithic.
-    * AND with a term unknown to a slice short-circuits to empty THERE
-    * (none of its docs can contain the term) — exactly the monolithic
-    * per-document semantics. */
-  def matchQueryRanked(keyword: String, logic: Logic): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
-      .map(_.matchQueryRanked(keyword, logic).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*)
-  }
-
-  /** Federated LM-Dirichlet full ranking ([[lmDirichletTopK]] without the
-    * k-cut): global cf through the stats override, global |C| already
-    * injected into every slice — query-likelihood scores float-exact. */
-  def lmDirichletAll(keyword: String, mu: Double = 2000.0): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
-      .map(_.lmDirichletAll(keyword, mu).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*)
-  }
+      maxExpansions: Int = 128): DataFrame =
+    if (pattern.isEmpty) emptyDocs(ranked)
+    else matchExpandedGlobal(col("term").rlike(Searcher.wildcardRegex(pattern)),
+      maxExpansions, ranked)
 
   /** Federated RegexpQuery — [[Searcher.regexpQuery]] over the union
     * corpus: the raw-regex expansion runs against the merged global
     * vocabulary with global-df cap ordering, like wildcard/prefix/fuzzy. */
   def regexpQuery(regex: String, ranked: Boolean = false,
-      maxExpansions: Int = 128): DataFrame = {
-    if (regex.isEmpty) return emptyDocs(ranked)
-    matchExpandedGlobal(
-      expandGlobal(col("term").rlike("^(?:" + regex + ")$"), maxExpansions),
-      ranked)
-  }
+      maxExpansions: Int = 128): DataFrame =
+    if (regex.isEmpty) emptyDocs(ranked)
+    else matchExpandedGlobal(col("term").rlike("^(?:" + regex + ")$"),
+      maxExpansions, ranked)
 
   /** Federated TermRangeQuery: the lexicographic dictionary slice
     * [lo, hi] (open ends on null/empty) over the merged vocabulary. */
@@ -436,22 +349,75 @@ final class Federation private (
     val loP = Option(lo).filter(_.nonEmpty).map(col("term") >= _)
     val hiP = Option(hi).filter(_.nonEmpty).map(col("term") <= _)
     val pred = (loP.toSeq ++ hiP.toSeq).reduceOption(_ && _).getOrElse(lit(true))
-    matchExpandedGlobal(expandGlobal(pred, maxExpansions), ranked)
+    matchExpandedGlobal(pred, maxExpansions, ranked)
   }
+
+  /** Federated autocomplete — [[Searcher.suggest]] over the union corpus:
+    * the [[mergedDict]] of the prefix, global (df desc, term asc) top-n. */
+  def suggest(prefix: String, n: Int = 10): DataFrame =
+    mergedDict(col("term").startsWith(prefix))
+      .orderBy(desc("df"), asc("term"))
+      .limit(n)
+
+  /** Federated spell correction — [[Searcher.didYouMean]] over the union
+    * corpus: the length-windowed [[mergedDict]] (the edit distance is a
+    * pure function of the term, so the per-term merge is exact), then ONE
+    * global (distance asc, df desc, term asc) top-n. Per-slice correction
+    * lists would diverge whenever candidates' local df ordering differs
+    * from the global one. */
+  def didYouMean(term: String, maxEdits: Int = 2, n: Int = 5): DataFrame =
+    analyzer.terms(term).headOption match {
+      case None =>
+        sliceSearchers.head.index.termDict
+          .select(col("term"), col("df")).withColumn("distance", lit(0)).limit(0)
+      case Some(t) =>
+        mergedDict(length(col("term"))
+            .between(t.length - maxEdits, t.length + maxEdits) &&
+            col("term") =!= t)
+          .withColumn("distance", levenshtein(col("term"), lit(t)))
+          .filter(col("distance") <= maxEdits)
+          .select(col("term"), col("df"), col("distance"))
+          .orderBy(asc("distance"), desc("df"), asc("term"))
+          .limit(n)
+    }
+
+  // ------------------------------------------------ matching and ranking
+
+  /** Federated MatchAllQuery: every document of every slice, `tieCols`
+    * order (the monolithic doc_ord order coincides under the builder's
+    * stable-ordering contract). */
+  def matchAll(): DataFrame = gather(ranked = false)(_.matchAll())
 
   /** Federated MatchQuery (AND/OR), unranked. Slice-local evaluation is
     * already globally correct: a term absent from a slice's dictionary is
     * absent from the slice's corpus, so AND yields nothing there and OR
     * drops the term — exactly the monolithic semantics. Results ordered by
     * `tieCols`. */
-  def matchQuery(keyword: String, logic: Logic): DataFrame = {
-    val parts = sliceSearchers.map(_.matchQuery(keyword, logic).drop("doc_ord"))
-    unionAll(parts).get.orderBy(tieAsc: _*)
-  }
+  def matchQuery(keyword: String, logic: Logic): DataFrame =
+    gather(ranked = false)(_.matchQuery(keyword, logic))
+
+  /** Federated ranked MatchQuery (TF-IDF — the reference's sorter): each
+    * slice scores with the merged global df injected into its tf-idf
+    * weights (tf and doc length are doc-local), float-exact to monolithic.
+    * AND with a term unknown to a slice short-circuits to empty THERE
+    * (none of its docs can contain the term) — exactly the monolithic
+    * per-document semantics. */
+  def matchQueryRanked(keyword: String, logic: Logic): DataFrame =
+    gather(ranked = true, global = Some(termsOf(keyword)))(
+      _.matchQueryRanked(keyword, logic))
 
   /** Federated total-hits count: Σ slice counts (disjoint corpora). */
   def countMatches(keyword: String, logic: Logic): Long =
     sliceSearchers.map(_.countMatches(keyword, logic)).sum
+
+  /** Federated minimum_should_match, unranked: the quota is decided per
+    * document (distinct matched terms), so slice results union losslessly —
+    * a slice resolving fewer than `minShouldMatch` of the query terms
+    * short-circuits to empty there, which is exactly right (none of its
+    * docs can contain terms absent from its whole corpus slice). For ranked
+    * msm semantics compose [[bm25TopK]]-style global scoring. */
+  def matchQueryMsm(keyword: String, minShouldMatch: Int): DataFrame =
+    gather(ranked = false)(_.matchQueryMsm(keyword, minShouldMatch))
 
   /** Federated PhraseQuery: positional matching is per-doc, so slice
     * results union losslessly. `ranked` scores the matched docs with
@@ -459,23 +425,40 @@ final class Federation private (
     * stats-override views) — float-exact to monolithic. Ordered by
     * (score desc,)? `tieCols`. */
   def phraseQuery(phrase: String, ranked: Boolean = false, slop: Int = 0,
-      inOrder: Boolean = false): DataFrame = {
-    val slices =
-      if (ranked) slicesWithGlobalStats(analyzer.terms(phrase).distinct)
-      else sliceSearchers
-    val parts = slices.map(
-      _.phraseQuery(phrase, ranked, slop, inOrder).drop("doc_ord"))
-    val all = unionAll(parts).get
-    if (ranked) all.orderBy(desc("score") +: tieAsc: _*)
-    else all.orderBy(tieAsc: _*)
-  }
+      inOrder: Boolean = false): DataFrame =
+    gather(ranked, global = if (ranked) Some(termsOf(phrase)) else None)(
+      _.phraseQuery(phrase, ranked, slop, inOrder))
 
-  /** Federated facet counts: per-slice facet aggregations re-aggregated —
-    * the gather merges facet-sized partials, never doc rows. */
-  def facetCounts(keyword: String, logic: Logic, facetCol: String): DataFrame = {
-    val parts = sliceSearchers.map(_.facetCounts(keyword, logic, facetCol))
-    unionAll(parts).get
-      .groupBy(col(facetCol)).agg(sum("n_docs").as("n_docs"))
+  /** Federated match_phrase_prefix — [[Searcher.matchPhrasePrefix]] over
+    * the union corpus: the final-slot expansion runs against the MERGED
+    * global vocabulary with global-df cap ordering ([[expandGlobal]] — a
+    * per-slice expansion would diverge exactly like prefix/fuzzy), then
+    * each slice evaluates the positional plan with its own term ids
+    * ([[Searcher.matchPhrasePrefixResolved]]): expansions unknown to a
+    * slice are dropped there (absent from its whole corpus slice), a slice
+    * missing any exact term contributes nothing — both exactly the
+    * monolithic per-document semantics. `ranked` scores with TF-IDF over
+    * the exact terms + expansions with the merged global df injected —
+    * float-exact to monolithic. */
+  def matchPhrasePrefix(phrase: String, slop: Int = 0,
+      maxExpansions: Int = 128, ranked: Boolean = false): DataFrame = {
+    require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
+    val qTerms = analyzer.terms(phrase)
+    if (qTerms.isEmpty) return emptyDocs(ranked)
+    val exact = qTerms.init
+    val expTerms = expandGlobal(col("term").startsWith(qTerms.last), maxExpansions)
+    if (expTerms.isEmpty) return emptyDocs(ranked)
+    val parts = sliceSearchers.zip(resolveGlobal((exact ++ expTerms).distinct))
+      .flatMap { case (s, rts) =>
+        val byTerm = rts.map(rt => rt.term -> rt).toMap
+        val exactInOrder = exact.map(byTerm.get)
+        val expRts = expTerms.flatMap(byTerm.get)
+        if (exactInOrder.exists(_.isEmpty) || expRts.isEmpty) None
+        else Some(
+          s.matchPhrasePrefixResolved(exactInOrder.flatten, expRts, slop, ranked)
+            .drop("doc_ord"))
+      }
+    unionOrdered(parts, ranked)
   }
 
   /** Federated boolean query tree — [[Searcher.boolQuery]] over the union
@@ -487,10 +470,7 @@ final class Federation private (
     * whenever the expansion fits `maxExpansions` (the usual case); a
     * super-cap expansion truncates per slice instead of globally. Ordered
     * by `tieCols`. */
-  def boolQuery(q: BoolQuery): DataFrame = {
-    val parts = sliceSearchers.map(_.boolQuery(q).drop("doc_ord"))
-    unionAll(parts).get.orderBy(tieAsc: _*)
-  }
+  def boolQuery(q: BoolQuery): DataFrame = gather(ranked = false)(_.boolQuery(q))
 
   /** Federated ranked tree — [[Searcher.boolQueryRanked]] over the union
     * corpus: each slice compiles the SAME tree with the GLOBAL document
@@ -521,9 +501,7 @@ final class Federation private (
     }
     val dfOverride = resolveGlobal(treeTerms(q).distinct)
       .flatten.map(rt => rt.term -> rt.df).toMap
-    val parts = sliceSearchers.map(
-      _.boolQueryRankedGlobal(q, dfOverride).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*)
+    gather(ranked = true)(_.boolQueryRankedGlobal(q, dfOverride))
   }
 
   /** Federated query string — [[Searcher.queryString]]: parsed ONCE on the
@@ -533,49 +511,49 @@ final class Federation private (
     if (ranked) boolQueryRanked(tree) else boolQuery(tree)
   }
 
-  /** Federated significant_terms — [[Searcher.significantTerms]] over the
-    * union corpus: per-slice `(term, df_in)` matched-set aggregations merge
-    * by Σ (slices are disjoint, so df_in and n_matched sum losslessly), and
-    * lift is recomputed from the MERGED global df and the global N —
-    * float-exact to monolithic because the double divisions run on
-    * identical integer inputs in the identical order. The gather merges
-    * vocab-bounded partials, never doc rows; each slice keeps
-    * significantTerms' documented matched-set-proportional scan cost. */
-  def significantTerms(keyword: String, logic: Logic, topN: Int = 10,
-      minDocCount: Long = 3): DataFrame = {
-    val spark = sliceSearchers.head.index.termDict.sparkSession
-    def empty = spark.emptyDataFrame
-      .withColumn("term", lit("")).withColumn("df_in", lit(0L))
-      .withColumn("df", lit(0L)).withColumn("lift", lit(0.0)).limit(0)
-    val parts = sliceSearchers.flatMap(_.matchedDfIn(keyword, logic))
-    val nMatched = parts.map(_._2).sum
-    if (parts.isEmpty || nMatched == 0) return empty
-    val dfIn = unionAll(parts.map(_._1)).get
-      .groupBy(col("term")).agg(sum(col("df_in")).as("df_in"))
-    val gdf = unionAll(sliceSearchers.map(
-      _.index.termDict.select(col("term"), col("df")))).get
-      .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    dfIn.join(gdf, "term")
-      .filter(col("df_in") >= minDocCount)
-      .withColumn("lift",
-        (col("df_in").cast("double") / lit(nMatched.toDouble)) /
-          (col("df").cast("double") / lit(numDocs.toDouble)))
-      .select("term", "df_in", "df", "lift")
-      .orderBy(desc("lift"), asc("term"))
-      .limit(topN)
-  }
+  /** Federated LM-Dirichlet full ranking ([[lmDirichletTopK]] without the
+    * k-cut): global cf through the stats override, global |C| already
+    * injected into every slice — query-likelihood scores float-exact. */
+  def lmDirichletAll(keyword: String, mu: Double = 2000.0): DataFrame =
+    gather(ranked = true, global = Some(termsOf(keyword)))(
+      _.lmDirichletAll(keyword, mu))
 
-  /** Federated minimum_should_match, unranked: the quota is decided per
-    * document (distinct matched terms), so slice results union losslessly —
-    * a slice resolving fewer than `minShouldMatch` of the query terms
-    * short-circuits to empty there, which is exactly right (none of its
-    * docs can contain terms absent from its whole corpus slice). For ranked
-    * msm semantics compose [[bm25TopK]]-style global scoring. */
-  def matchQueryMsm(keyword: String, minShouldMatch: Int): DataFrame = {
-    val parts = sliceSearchers.map(
-      _.matchQueryMsm(keyword, minShouldMatch).drop("doc_ord"))
-    unionAll(parts).get.orderBy(tieAsc: _*)
-  }
+  /** Federated LM-Dirichlet: collection statistics merge exactly like
+    * BM25's — global cf via the stats override, global C (Σ tokens) already
+    * injected into every slice — so query-likelihood scores are float-exact
+    * to monolithic. */
+  def lmDirichletTopK(keyword: String, k: Int, mu: Double = 2000.0): DataFrame =
+    gather(ranked = true, Some(k), Some(termsOf(keyword)))(
+      _.lmDirichletTopK(keyword, k, mu))
+
+  /** Federated dis_max: per-slice evaluation with global df weights, then
+    * the standard top-k merge — a doc lives in exactly one slice, so its
+    * combined clause score is complete there. */
+  def disMaxTopK(clauses: Seq[String], k: Int,
+      tieBreaker: Double = 0.0): DataFrame =
+    gather(ranked = true, Some(k), Some(termsOf(clauses: _*)))(
+      _.disMaxTopK(clauses, k, tieBreaker))
+
+  /** Federated boosting query: positive BM25 with global weights, negative
+    * demotion decided per document (slice-local membership is globally
+    * correct) — demoted scores are final before each slice's k-cut. */
+  def bm25TopKBoosting(positive: String, negative: String,
+      negativeBoost: Double, k: Int, negLogic: Logic = Or): DataFrame =
+    gather(ranked = true, Some(k), Some(termsOf(positive)))(
+      _.bm25TopKBoosting(positive, negative, negativeBoost, k, negLogic))
+
+  /** Federated function_score: the factor is a per-document docs-column
+    * expression, so the multiplied scores are final per slice. */
+  def bm25TopKFunctionScore(keyword: String, factor: Column, k: Int): DataFrame =
+    gather(ranked = true, Some(k), Some(termsOf(keyword)))(
+      _.bm25TopKFunctionScore(keyword, factor, k))
+
+  /** Federated filter context: the predicate restricts per-document rows
+    * (slice-local is globally correct), scores stay global via the stats
+    * override — standard top-k merge. */
+  def bm25TopKFiltered(keyword: String, docFilter: Column, k: Int): DataFrame =
+    gather(ranked = true, Some(k), Some(termsOf(keyword)))(
+      _.bm25TopKFiltered(keyword, docFilter, k))
 
   /** Federated sort-by-field top-k: per-slice TakeOrdered k-cuts merge —
     * every global top-k row ranks ≤ k within its own slice — and the
@@ -585,9 +563,8 @@ final class Federation private (
   def matchTopKSortBy(keyword: String, logic: Logic, sortCol: String, k: Int,
       ascending: Boolean = true): DataFrame = {
     val key = if (ascending) asc(sortCol) else desc(sortCol)
-    val parts = sliceSearchers.map(
-      _.matchTopKSortBy(keyword, logic, sortCol, k, ascending).drop("doc_ord"))
-    unionAll(parts).get.orderBy(key +: tieAsc: _*).limit(k)
+    gather(ranked = false, Some(k), order = key +: tieAsc)(
+      _.matchTopKSortBy(keyword, logic, sortCol, k, ascending))
   }
 
   /** Federated field collapsing with GLOBAL-stats scores: each slice scores
@@ -598,153 +575,14 @@ final class Federation private (
     * slice's collapsed top-k. The gather re-collapses groups spanning
     * slices over ≤ slices·k rows. */
   def bm25TopKCollapse(keyword: String, groupCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val rtss = resolveGlobal(analyzer.terms(keyword).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        val w = Window.partitionBy(col(groupCol))
-          .orderBy(desc("score") +: tieAsc: _*)
-        s.index.docs
-          .join(s.scoredMatches(rts, s.bm25Expr).select("doc_ord", "score"),
-            "doc_ord")
-          .drop("doc_ord")
-          .withColumn("grp_rank", row_number().over(w))
-          .filter(col("grp_rank") === 1).drop("grp_rank")
-          .orderBy(desc("score") +: tieAsc: _*).limit(k)
-    }
-    unionAll(parts) match {
-      case None => emptyDocs(withScore = true).limit(0)
-      case Some(all) =>
-        val w2 = Window.partitionBy(col(groupCol))
-          .orderBy(desc("score") +: tieAsc: _*)
-        all.withColumn("grp_rank", row_number().over(w2))
-          .filter(col("grp_rank") === 1).drop("grp_rank")
-          .orderBy(desc("score") +: tieAsc: _*).limit(k)
-    }
-  }
-
-  /** Federated hit-term highlighting: which query terms each matched doc
-    * contains is a per-document read of the doc's OWN slice postings —
-    * lossless union (a slice-unknown term is absent from its docs, so the
-    * AND fold matches monolithic membership slice by slice). */
-  def highlightTerms(keyword: String, logic: Logic): DataFrame = {
-    val parts = sliceSearchers.map(
-      _.highlightTerms(keyword, logic).drop("doc_ord"))
-    unionAll(parts).get.orderBy(tieAsc: _*)
-  }
-
-  /** Federated snippets: first-hit windows are per-document (position from
-    * the doc's own slice posting, text re-analyzed per row) — lossless
-    * union. */
-  def snippet(keyword: String, window: Int = 2): DataFrame = {
-    val parts = sliceSearchers.map(_.snippet(keyword, window).drop("doc_ord"))
-    unionAll(parts).get.orderBy(tieAsc: _*)
-  }
-
-  private def keyPredOf(key: Seq[Any]): Column =
-    tieCols.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
-
-  /** Home-slice lookup by stable key — the addressing step every
-    * single-document federated read shares ([[moreLikeThis]],
-    * [[termVectors]], [[explainScore]]): concurrent per-slice key probes;
-    * at most one slice may hold the key (disjoint slice corpora). Returns
-    * (slice index, slice-local ordinal). */
-  private def locate(key: Seq[Any]): Option[(Int, Long)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    require(key.size == tieCols.size,
-      s"key needs one value per tie column $tieCols, got $key")
-    if (keyLookup.isDefined) return keyLookup.get(key)
-    val pred = keyPredOf(key)
-    val located: Seq[(Int, Long)] = Await.result(
-      Future.sequence(sliceSearchers.zipWithIndex.map { case (s, i) =>
-        Future(s.index.docs.filter(pred).select(col("doc_ord"))
-          .collect().toSeq.map(r => (i, r.getLong(0))))
-      }), Duration.Inf).flatten
-    require(located.size <= 1,
-      s"tie key ${key.mkString(",")} matches ${located.size} documents — " +
-        "a stable key must be unique across slices")
-    located.headOption
-  }
-
-  /** Federated MoreLikeThis — [[Searcher.moreLikeThis]] over the union
-    * corpus, the source document addressed by its stable tie key (`key`
-    * aligns with `tieCols`; slice ordinals are local, so ordinals can't
-    * address across slices). Three-step, float-exact to monolithic:
-    * (1) locate the home slice by key ([[locate]]); (2) select the
-    * `maxQueryTerms` most characteristic source terms by
-    * tf · tf-idf-weight over the MERGED global df (ties term asc) — tf
-    * comes from the home slice's d_group-pruned posting rows (a doc lives
-    * in exactly one slice, so slice tf is union tf), df from
-    * [[resolveGlobal]], and the weight formula runs on the injected global
-    * N — identical selection to a monolithic union index; (3) the standard
-    * federated ranked OR over the selected terms with global-df BM25
-    * weights, source doc excluded by key. */
-  def moreLikeThis(key: Seq[Any], maxQueryTerms: Int = 10,
-      k: Int = 10): DataFrame = {
-    def keyPred: Column = keyPredOf(key)
-    val located = locate(key)
-    if (located.isEmpty) return emptyDocs(withScore = true).limit(0)
-    val (home, docOrd) = located.get
-    val homeS = sliceSearchers(home)
-    val srcTf: Map[String, Long] = homeS.termVectors(docOrd)
-      .select(col("term"), col("tf")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    if (srcTf.isEmpty) return emptyDocs(withScore = true).limit(0)
-    val rtss = resolveGlobal(srcTf.keys.toSeq.sorted)
-    val globalDf: Map[String, Long] =
-      rtss.flatten.map(rt => rt.term -> rt.df).toMap
-    val top: Set[String] = srcTf.keys.toSeq
-      .map(t => (t, srcTf(t) * homeS.tfIdfWeight(globalDf(t))))
-      .sortBy { case (t, w) => (-w, t) }
-      .take(maxQueryTerms).map(_._1).toSet
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.exists(rt => top(rt.term)) =>
-        slicedScores(s, rts.filter(rt => top(rt.term))).filter(!keyPred)
-    }
-    unionAll(parts) match {
-      case None      => emptyDocs(withScore = true).limit(0)
-      case Some(all) => all.orderBy(desc("score") +: tieAsc: _*).limit(k)
-    }
-  }
-
-  /** Federated match_phrase_prefix — [[Searcher.matchPhrasePrefix]] over
-    * the union corpus: the final-slot expansion runs against the MERGED
-    * global vocabulary with global-df cap ordering ([[expandGlobal]] — a
-    * per-slice expansion would diverge exactly like prefix/fuzzy), then
-    * each slice evaluates the positional plan with its own term ids
-    * ([[Searcher.matchPhrasePrefixResolved]]): expansions unknown to a
-    * slice are dropped there (absent from its whole corpus slice), a slice
-    * missing any exact term contributes nothing — both exactly the
-    * monolithic per-document semantics. `ranked` scores with TF-IDF over
-    * the exact terms + expansions with the merged global df injected —
-    * float-exact to monolithic. */
-  def matchPhrasePrefix(phrase: String, slop: Int = 0,
-      maxExpansions: Int = 128, ranked: Boolean = false): DataFrame = {
-    require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
-    val qTerms = analyzer.terms(phrase)
-    if (qTerms.isEmpty) return emptyDocs(ranked)
-    val exact = qTerms.init
-    val prefix = qTerms.last
-    val expTerms = expandGlobal(col("term").startsWith(prefix), maxExpansions)
-    if (expTerms.isEmpty) return emptyDocs(ranked)
-    val rtss = resolveGlobal((exact ++ expTerms).distinct)
-    val parts = sliceSearchers.zip(rtss).flatMap { case (s, rts) =>
-      val byTerm = rts.map(rt => rt.term -> rt).toMap
-      val exactInOrder = exact.map(byTerm.get)
-      val expRts = expTerms.flatMap(byTerm.get)
-      if (exactInOrder.exists(_.isEmpty) || expRts.isEmpty) None
-      else Some(
-        s.matchPhrasePrefixResolved(exactInOrder.flatten, expRts, slop, ranked)
-          .drop("doc_ord"))
-    }
-    unionAll(parts) match {
-      case None => emptyDocs(ranked)
-      case Some(all) =>
-        if (ranked) all.orderBy(desc("score") +: tieAsc: _*)
-        else all.orderBy(tieAsc: _*)
-    }
+    val best = Window.partitionBy(col(groupCol)).orderBy(scoreOrder: _*)
+    def collapse(df: DataFrame): DataFrame =
+      df.withColumn("grp_rank", row_number().over(best))
+        .filter(col("grp_rank") === 1).drop("grp_rank")
+    val parts = resolvedSlices(resolveGlobal(termsOf(keyword)))(
+      (s, rts) => cut(collapse(slicedScores(s, rts)), k))
+    unionOrdered(parts.reduceOption(_ unionByName _).map(collapse).toSeq,
+      ranked = true, Some(k))
   }
 
   /** Federated rescore window — [[Searcher.bm25TopKRescore]] over the union
@@ -767,9 +605,8 @@ final class Federation private (
       s"windowSize ($windowSize) must be >= k ($k): results come from the window")
     val spark = sliceSearchers.head.index.docs.sparkSession
     import spark.implicits._
-    val kwTerms = analyzer.terms(keyword).distinct
-    val phTerms = analyzer.terms(rescorePhrase).distinct
-    val slices = slicesWithGlobalStats((kwTerms ++ phTerms).distinct)
+    val kwTerms = termsOf(keyword)
+    val slices = slicesWithGlobalStats(termsOf(keyword, rescorePhrase))
     val scoreQ = round(col("score"), Searcher.PageGrain)
     val parts = slices.zipWithIndex.flatMap { case (s, i) =>
       val rts = s.resolve(kwTerms)
@@ -782,13 +619,13 @@ final class Federation private (
           .orderBy(scoreQ.desc +: tieAsc: _*)
           .limit(windowSize))
     }
-    if (parts.isEmpty) return emptyDocs(withScore = true).limit(0)
-    val winRows = unionAll(parts).get
+    if (parts.isEmpty) return emptyDocs(withScore = true)
+    val winRows = union(parts)
       .orderBy(scoreQ.desc +: tieAsc: _*)
       .limit(windowSize)
       .select(col("_slice"), col("doc_ord"), col("score"))
       .collect()
-    if (winRows.isEmpty) return emptyDocs(withScore = true).limit(0)
+    if (winRows.isEmpty) return emptyDocs(withScore = true)
     val parts2 = winRows.groupBy(_.getInt(0)).toSeq.map { case (i, rows) =>
       val s = slices(i)
       val win = rows.map(r => (r.getLong(1), r.getDouble(2))).toSeq
@@ -809,72 +646,7 @@ final class Federation private (
       s.index.docs.join(combined.select("doc_ord", "score"), "doc_ord")
         .drop("doc_ord")
     }
-    unionAll(parts2).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
-  }
-
-  /** Slices re-viewed with the corpus-wide statistics substituted for the
-    * given terms: every scoring surface on the returned searchers weighs
-    * with global statistics while postings pruning and term ids stay
-    * slice-local — the general federation hook behind dis_max / boosting /
-    * function_score / grouped / LM / rescore / paging. The views carry the
-    * FULL per-slice resolutions from [[resolveGlobal]]'s one concurrent
-    * pass ([[Searcher.withPreResolved]]), so per-slice query compilation
-    * runs ZERO further dictionary jobs for the covered terms — without
-    * this, every slice re-resolved serially at plan build, stacking a
-    * dictionary job per slice per query at realistic slice counts. */
-  private def slicesWithGlobalStats(terms: Seq[String]): Seq[Searcher] = {
-    val covered = terms.toSet
-    sliceSearchers.zip(resolveGlobal(terms)).map { case (s, rts) =>
-      s.withPreResolved(covered, rts.map(rt => rt.term -> rt).toMap)
-    }
-  }
-
-  /** Federated dis_max: per-slice evaluation with global df weights, then
-    * the standard top-k merge — a doc lives in exactly one slice, so its
-    * combined clause score is complete there. */
-  def disMaxTopK(clauses: Seq[String], k: Int,
-      tieBreaker: Double = 0.0): DataFrame = {
-    val parts = slicesWithGlobalStats(clauses.flatMap(analyzer.terms(_)).distinct)
-      .map(_.disMaxTopK(clauses, k, tieBreaker).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
-  }
-
-  /** Federated boosting query: positive BM25 with global weights, negative
-    * demotion decided per document (slice-local membership is globally
-    * correct) — demoted scores are final before each slice's k-cut. */
-  def bm25TopKBoosting(positive: String, negative: String,
-      negativeBoost: Double, k: Int, negLogic: Logic = Or): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(positive).distinct)
-      .map(_.bm25TopKBoosting(positive, negative, negativeBoost, k, negLogic)
-        .drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
-  }
-
-  /** Federated function_score: the factor is a per-document docs-column
-    * expression, so the multiplied scores are final per slice. */
-  def bm25TopKFunctionScore(keyword: String, factor: Column, k: Int): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
-      .map(_.bm25TopKFunctionScore(keyword, factor, k).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
-  }
-
-  /** Federated LM-Dirichlet: collection statistics merge exactly like
-    * BM25's — global cf via the stats override, global C (Σ tokens) already
-    * injected into every slice — so query-likelihood scores are float-exact
-    * to monolithic. */
-  def lmDirichletTopK(keyword: String, k: Int, mu: Double = 2000.0): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
-      .map(_.lmDirichletTopK(keyword, k, mu).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
-  }
-
-  /** Federated filter context: the predicate restricts per-document rows
-    * (slice-local is globally correct), scores stay global via the stats
-    * override — standard top-k merge. */
-  def bm25TopKFiltered(keyword: String, docFilter: Column, k: Int): DataFrame = {
-    val parts = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
-      .map(_.bm25TopKFiltered(keyword, docFilter, k).drop("doc_ord"))
-    unionAll(parts).get.orderBy(desc("score") +: tieAsc: _*).limit(k)
+    unionOrdered(parts2, ranked = true, Some(k))
   }
 
   /** Federated cursor pagination (search_after): every slice pages in the
@@ -897,17 +669,14 @@ final class Federation private (
     require(tieCols.size == 1,
       s"federated search_after needs a single stable key column, got $tieCols")
     val tieCol = tieCols.head
-    val terms = analyzer.terms(keyword).distinct
-    val slices = slicesWithGlobalStats(terms)
+    val terms = termsOf(keyword)
     val scoreQ = round(col("score"), Searcher.PageGrain)
-    val parts = slices.map { s =>
+    val pageOrder = Seq(scoreQ.desc, col(tieCol).asc)
+    val parts = slicesWithGlobalStats(terms).map { s =>
       val rts = s.resolve(terms)
-      if (rts.isEmpty) emptyDocs(withScore = true).limit(0)
+      if (rts.isEmpty) emptyDocs(withScore = true)
       else {
-        val scored0 = s.index.docs
-          .join(s.scoredMatches(rts, s.bm25Expr).select("doc_ord", "score"),
-            "doc_ord")
-          .drop("doc_ord")
+        val scored0 = slicedScores(s, rts)
         val scored = cursor match {
           case None => scored0
           case Some((afterScore, afterKey)) =>
@@ -917,10 +686,10 @@ final class Federation private (
             scored0.filter(scoreQ < cursorQ ||
               (scoreQ === cursorQ && col(tieCol) > afterKey))
         }
-        scored.orderBy(scoreQ.desc, col(tieCol).asc).limit(k)
+        scored.orderBy(pageOrder: _*).limit(k)
       }
     }
-    unionAll(parts).get.orderBy(scoreQ.desc, col(tieCol).asc).limit(k)
+    unionOrdered(parts, ranked = true, Some(k), pageOrder)
   }
 
   /** Federated grouped relevance (has_child score modes): groups SPAN
@@ -933,16 +702,15 @@ final class Federation private (
       scoreMode: String = "max"): DataFrame = {
     require(Set("max", "sum", "avg", "min")(scoreMode),
       s"scoreMode must be one of max, sum, avg, min; got $scoreMode")
-    val slices = slicesWithGlobalStats(analyzer.terms(keyword).distinct)
     val baseMode = if (scoreMode == "avg") "sum" else scoreMode
-    val parts = slices.map(
+    val parts = slicesWithGlobalStats(termsOf(keyword)).map(
       _.bm25TopKGrouped(keyword, groupCol, Int.MaxValue, baseMode))
     val agg: Column = scoreMode match {
       case "max" => max(col("score"))
       case "min" => min(col("score"))
       case _     => sum(col("score")) // sum, and avg's numerator
     }
-    val merged = unionAll(parts).get
+    val merged = union(parts)
       .groupBy(col(groupCol))
       .agg(agg.as("_s"), sum(col("n_hits")).as("n_hits"))
     val scored =
@@ -954,40 +722,164 @@ final class Federation private (
       .limit(k)
   }
 
+  // --------------------------------------------- per-document reads
+
+  /** Federated hit-term highlighting: which query terms each matched doc
+    * contains is a per-document read of the doc's OWN slice postings —
+    * lossless union (a slice-unknown term is absent from its docs, so the
+    * AND fold matches monolithic membership slice by slice). */
+  def highlightTerms(keyword: String, logic: Logic): DataFrame =
+    gather(ranked = false)(_.highlightTerms(keyword, logic))
+
+  /** Federated snippets: first-hit windows are per-document (position from
+    * the doc's own slice posting, text re-analyzed per row) — lossless
+    * union. */
+  def snippet(keyword: String, window: Int = 2): DataFrame =
+    gather(ranked = false)(_.snippet(keyword, window))
+
+  private def keyPredOf(key: Seq[Any]): Column =
+    tieCols.zip(key).map { case (c, v) => col(c) === lit(v) }.reduce(_ && _)
+
+  /** Home-slice lookup by stable key — the addressing step every
+    * single-document federated read shares ([[moreLikeThis]],
+    * [[termVectors]], [[explainScore]]): concurrent per-slice key probes;
+    * at most one slice may hold the key (disjoint slice corpora). Returns
+    * (slice index, slice-local ordinal). */
+  private def locate(key: Seq[Any]): Option[(Int, Long)] = {
+    require(key.size == tieCols.size,
+      s"key needs one value per tie column $tieCols, got $key")
+    val located = keyLookup.fold(
+      Federation.concurrently(sliceSearchers.zipWithIndex) { case (s, i) =>
+        s.index.docs.filter(keyPredOf(key)).select(col("doc_ord"))
+          .collect().toSeq.map(r => (i, r.getLong(0)))
+      }.flatten)(_(key))
+    require(located.size <= 1,
+      s"tie key ${key.mkString(",")} matches ${located.size} documents — " +
+        "a stable key must be unique across slices")
+    located.headOption
+  }
+
+  /** Term vectors of one document addressed by its stable key — tf and
+    * positions are properties of the document alone, so the home slice's
+    * view IS the union-index view; only the home slice is read. */
+  def termVectors(key: Seq[Any]): DataFrame =
+    locate(key) match {
+      case None           => sliceSearchers.head.termVectors(-1L).limit(0)
+      case Some((i, ord)) => sliceSearchers(i).termVectors(ord)
+    }
+
+  /** Per-term BM25 explanation with FEDERATED statistics: idf weighs with
+    * the merged global df (stats override), tf/dl come from the doc's home
+    * slice — the contributions sum to exactly the doc's federated
+    * [[bm25All]] score, the property the monolithic explain carries. */
+  def explainScore(keyword: String, key: Seq[Any]): DataFrame =
+    locate(key) match {
+      case None => sliceSearchers.head.explainScore(keyword, -1L).limit(0)
+      case Some((i, ord)) =>
+        slicesWithGlobalStats(termsOf(keyword))(i).explainScore(keyword, ord)
+    }
+
+  /** Federated MoreLikeThis — [[Searcher.moreLikeThis]] over the union
+    * corpus, the source document addressed by its stable tie key (`key`
+    * aligns with `tieCols`; slice ordinals are local, so ordinals can't
+    * address across slices). Three-step, float-exact to monolithic:
+    * (1) locate the home slice by key ([[locate]]); (2) select the
+    * `maxQueryTerms` most characteristic source terms by
+    * tf · tf-idf-weight over the MERGED global df (ties term asc) — tf
+    * comes from the home slice's d_group-pruned posting rows (a doc lives
+    * in exactly one slice, so slice tf is union tf), df from
+    * [[resolveGlobal]], and the weight formula runs on the injected global
+    * N — identical selection to a monolithic union index; (3) the standard
+    * federated ranked OR over the selected terms with global-df BM25
+    * weights, source doc excluded by key. */
+  def moreLikeThis(key: Seq[Any], maxQueryTerms: Int = 10,
+      k: Int = 10): DataFrame = {
+    val located = locate(key)
+    if (located.isEmpty) return emptyDocs(withScore = true)
+    val (home, docOrd) = located.get
+    val homeS = sliceSearchers(home)
+    val srcTf: Map[String, Long] = homeS.termVectors(docOrd)
+      .select(col("term"), col("tf")).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    if (srcTf.isEmpty) return emptyDocs(withScore = true)
+    val rtss = resolveGlobal(srcTf.keys.toSeq.sorted)
+    val globalDf: Map[String, Long] =
+      rtss.flatten.map(rt => rt.term -> rt.df).toMap
+    val top: Set[String] = srcTf.keys.toSeq
+      .map(t => (t, srcTf(t) * homeS.tfIdfWeight(globalDf(t))))
+      .sortBy { case (t, w) => (-w, t) }
+      .take(maxQueryTerms).map(_._1).toSet
+    unionOrdered(resolvedSlices(rtss.map(_.filter(rt => top(rt.term))))(
+      slicedScores(_, _).filter(!keyPredOf(key))), ranked = true, Some(k))
+  }
+
+  // ------------------------------------------------------------- facets
+
+  /** Federated facet counts: per-slice facet aggregations re-aggregated —
+    * the gather merges facet-sized partials, never doc rows. */
+  def facetCounts(keyword: String, logic: Logic, facetCol: String): DataFrame =
+    resum(sliceSearchers.map(_.facetCounts(keyword, logic, facetCol)),
+      facetCol, "n_docs")
+
+  /** Federated histogram facet: per-slice bucket partials re-aggregated —
+    * the gather merges bucket-sized rows, never docs. */
+  def facetHistogram(keyword: String, logic: Logic, valueCol: String,
+      binWidth: Long): DataFrame =
+    resum(sliceSearchers.map(
+      _.facetHistogram(keyword, logic, valueCol, binWidth)), "bucket", "n_docs")
+
+  /** Federated date-histogram facet: the timestamp expression evaluates per
+    * slice; calendar buckets merge by Σ. */
+  def facetDateHistogram(keyword: String, logic: Logic, ts: Column,
+      interval: String): DataFrame =
+    resum(sliceSearchers.map(
+      _.facetDateHistogram(keyword, logic, ts, interval)), "bucket", "n_docs")
+
   /** Federated stats facet: count/min/max/sum are lossless partial merges
     * over disjoint slices; avg is recomputed as Σsum / Σcount. The sum (and
     * hence avg) can differ from monolithic in the last ulp — double
     * summation order differs — which is the same caveat any two partition
     * layouts of one cluster carry. */
-  def facetStats(keyword: String, logic: Logic, valueCol: String): DataFrame = {
-    val parts = sliceSearchers.map(_.facetStats(keyword, logic, valueCol))
-    unionAll(parts).get
+  def facetStats(keyword: String, logic: Logic, valueCol: String): DataFrame =
+    union(sliceSearchers.map(_.facetStats(keyword, logic, valueCol)))
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         min(col("vmin")).as("vmin"), max(col("vmax")).as("vmax"),
         sum(col("vsum")).as("vsum"))
       .withColumn("vavg",
         when(col("n_docs") === 0, lit(null).cast("double"))
           .otherwise(col("vsum") / col("n_docs").cast("double")))
-  }
 
-  /** Federated histogram facet: per-slice bucket partials re-aggregated —
-    * the gather merges bucket-sized rows, never docs. */
-  def facetHistogram(keyword: String, logic: Logic, valueCol: String,
-      binWidth: Long): DataFrame = {
-    val parts = sliceSearchers.map(
-      _.facetHistogram(keyword, logic, valueCol, binWidth))
-    unionAll(parts).get
-      .groupBy(col("bucket")).agg(sum(col("n_docs")).as("n_docs"))
-  }
+  /** The union of every slice's matched rows projected to `valueCol` — the
+    * input of the value-merging facets below. */
+  private def matchedValues(keyword: String, logic: Logic,
+      valueCol: String): DataFrame =
+    union(sliceSearchers.map(_.matchedValues(keyword, logic, valueCol)))
 
-  /** Federated date-histogram facet: the timestamp expression evaluates per
-    * slice; calendar buckets merge by Σ. */
-  def facetDateHistogram(keyword: String, logic: Logic, ts: Column,
-      interval: String): DataFrame = {
-    val parts = sliceSearchers.map(
-      _.facetDateHistogram(keyword, logic, ts, interval))
-    unionAll(parts).get
-      .groupBy(col("bucket")).agg(sum(col("n_docs")).as("n_docs"))
+  /** Federated significant_terms — [[Searcher.significantTerms]] over the
+    * union corpus: per-slice `(term, df_in)` matched-set aggregations merge
+    * by Σ (slices are disjoint, so df_in and n_matched sum losslessly), and
+    * lift is recomputed from the [[mergedDict]] df and the global N —
+    * float-exact to monolithic because the double divisions run on
+    * identical integer inputs in the identical order. The gather merges
+    * vocab-bounded partials, never doc rows; each slice keeps
+    * significantTerms' documented matched-set-proportional scan cost. */
+  def significantTerms(keyword: String, logic: Logic, topN: Int = 10,
+      minDocCount: Long = 3): DataFrame = {
+    val parts = sliceSearchers.flatMap(_.matchedDfIn(keyword, logic))
+    val nMatched = parts.map(_._2).sum
+    if (parts.isEmpty || nMatched == 0)
+      return sliceSearchers.head.index.termDict.sparkSession.emptyDataFrame
+        .withColumn("term", lit("")).withColumn("df_in", lit(0L))
+        .withColumn("df", lit(0L)).withColumn("lift", lit(0.0)).limit(0)
+    resum(parts.map(_._1), "term", "df_in")
+      .join(mergedDict(lit(true)), "term")
+      .filter(col("df_in") >= minDocCount)
+      .withColumn("lift",
+        (col("df_in").cast("double") / lit(nMatched.toDouble)) /
+          (col("df").cast("double") / lit(numDocs.toDouble)))
+      .select("term", "df_in", "df", "lift")
+      .orderBy(desc("lift"), asc("term"))
+      .limit(topN)
   }
 
   /** Federated cardinality facet, exact: per-slice matched rows project to
@@ -996,21 +888,18 @@ final class Federation private (
     * at most one row per distinct value per partition, never the matched
     * set. A value present in several slices counts once (cross-slice
     * partials cannot be summed — this is why counts don't merge). */
-  def facetCardinality(keyword: String, logic: Logic, facetCol: String): DataFrame = {
-    val parts = sliceSearchers.map(_.matchedValues(keyword, logic, facetCol))
-    unionAll(parts).get.agg(count_distinct(col(facetCol)).as("n_distinct"))
-  }
+  def facetCardinality(keyword: String, logic: Logic, facetCol: String): DataFrame =
+    matchedValues(keyword, logic, facetCol)
+      .agg(count_distinct(col(facetCol)).as("n_distinct"))
 
   /** Federated cardinality, HLL++ flavor: the same union, one
     * `approx_count_distinct` — sketch partials merge across union branches
     * exactly as across partitions, so the estimate is the same algorithm a
     * monolithic index runs (sketch-sized shuffle at any cardinality). */
   def facetCardinalityApprox(keyword: String, logic: Logic, facetCol: String,
-      rsd: Double = 0.05): DataFrame = {
-    val parts = sliceSearchers.map(_.matchedValues(keyword, logic, facetCol))
-    unionAll(parts).get
+      rsd: Double = 0.05): DataFrame =
+    matchedValues(keyword, logic, facetCol)
       .agg(approx_count_distinct(col(facetCol), rsd).as("n_distinct"))
-  }
 
   /** Federated percentiles facet, exact flavor: one `percentile`
     * interpolation over the UNION of per-slice matched values — exact
@@ -1038,8 +927,7 @@ final class Federation private (
     val slots = fractions.zipWithIndex.map { case (f, i) =>
       struct(lit(f).as("fraction"), lit(i + 1).as("_i"))
     }
-    val parts = sliceSearchers.map(_.matchedValues(keyword, logic, valueCol))
-    unionAll(parts).get
+    matchedValues(keyword, logic, valueCol)
       .agg(agg(col(valueCol).cast("double")).as("_ps"))
       .select(explode(array(slots: _*)).as("_f"), col("_ps"))
       .select(col("_f.fraction").as("fraction"),
@@ -1053,18 +941,14 @@ final class Federation private (
     * stats — the federated twin of [[Searcher.bm25Scores]]: the per-field
     * building block [[MultiField]] combines across field federations. No
     * top-k cut (the combiner aggregates across fields first). */
-  private[query] def bm25ScoresByKey(keyword: String): DataFrame = {
-    val rtss = resolveGlobal(analyzer.terms(keyword).distinct)
-    val parts = sliceSearchers.zip(rtss).collect {
-      case (s, rts) if rts.nonEmpty =>
-        s.index.docs.select(col("doc_ord") +: tieCols.map(col): _*)
-          .join(s.scoredMatches(rts, s.bm25Expr).select("doc_ord", "score"),
-            "doc_ord")
-          .drop("doc_ord")
-    }
-    unionAll(parts).getOrElse(
+  private[query] def bm25ScoresByKey(keyword: String): DataFrame =
+    resolvedSlices(resolveGlobal(termsOf(keyword))) { (s, rts) =>
+      s.index.docs.select(col("doc_ord") +: tieCols.map(col): _*)
+        .join(s.scoredMatches(rts, s.bm25Expr).select("doc_ord", "score"),
+          "doc_ord")
+        .drop("doc_ord")
+    }.reduceOption(_ unionByName _).getOrElse(
       emptyDocs(withScore = true).select(tieCols.map(col) :+ col("score"): _*))
-  }
 
   /** Global corpus stats (what the slices' scoring runs on). */
   def numDocs: Long = sliceSearchers.head.index.numDocs
@@ -1073,28 +957,38 @@ final class Federation private (
 
 object Federation {
 
-  /** Federate in-memory/built [[TextIndex]] slices. One pass over slice
-    * METADATA (numDocs, totalTokens — no corpus scan) computes the global
-    * stats every slice's scoring then runs on. */
-  def apply(slices: Seq[TextIndex], analyzer: Analyzer,
-      blockParams: BlockParams = BlockParams(),
-      tieCols: Seq[String] = Seq("doc_id")): Federation = {
-    require(slices.nonEmpty, "federation needs at least one slice")
+  /** `f` over every element concurrently, in order — the per-slice
+    * dictionary lookups and key probes are independent small jobs. */
+  private def concurrently[A, B](xs: Seq[A])(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence(xs.map(x => Future(f(x)))), Duration.Inf)
+  }
+
+  /** The slices re-viewed with the corpus-wide statistics every slice's
+    * scoring runs on — one pass over slice METADATA (numDocs, totalTokens —
+    * no corpus scan): `N = Σ numDocs`, `avgdl = Σ totalTokens / N`. */
+  private def withGlobalStats(slices: Seq[TextIndex]): Seq[TextIndex] = {
     val globalN = slices.map(_.numDocs).sum
     val totalTokens = slices.map(_.exactTotalTokens).sum
     val avgdl = if (globalN == 0) 0.0 else totalTokens.toDouble / globalN
-    new Federation(
-      slices.map(ix => new Searcher(
-        ix.copy(numDocs = globalN, avgDocLen = avgdl, totalTokens = totalTokens),
-        analyzer, blockParams, None, sortUnranked = false)),
-      tieCols)
+    slices.map(_.copy(numDocs = globalN, avgDocLen = avgdl, totalTokens = totalTokens))
   }
 
-  /** Federate persisted slices (each with its own WAND block table).
-    * Scoring parameters must agree across slices — per-slice block maxima
-    * are only comparable under one (k1, b) — and every slice must have been
-    * built with the analyzer being queried with: a mixed-vocabulary
-    * federation (one slice stemmed, another not) would silently drop the
+  /** Federate in-memory/built [[TextIndex]] slices. */
+  def apply(slices: Seq[TextIndex], analyzer: Analyzer,
+      blockParams: BlockParams = BlockParams(),
+      tieCols: Seq[String] = Seq("doc_id")): Federation =
+    new Federation(withGlobalStats(slices).map(
+      new Searcher(_, analyzer, blockParams, None, sortUnranked = false)), tieCols)
+
+  /** Federate persisted slices (each with its own WAND block table, read
+    * per query only at the query terms' `t_bucket` leaves). Scoring
+    * parameters must agree across slices — per-slice block maxima are only
+    * comparable under one (k1, b) — and every slice must have been built
+    * with the analyzer being queried with: a mixed-vocabulary federation
+    * (one slice stemmed, another not) would silently drop the
     * differently-analyzed slices' matches and merge df over incomparable
     * term spaces. */
   def ofPersisted(slices: Seq[PersistedIndex], analyzer: Analyzer,
@@ -1110,9 +1004,6 @@ object Federation {
     require(analyzers == Seq(analyzer.describe),
       s"analyzer mismatch: slices built with ${analyzers.mkString(" / ")}, " +
         s"querying with ${analyzer.describe} — federate only same-analyzer slices")
-    val globalN = slices.map(_.index.numDocs).sum
-    val totalTokens = slices.map(_.index.exactTotalTokens).sum
-    val avgdl = if (globalN == 0) 0.0 else totalTokens.toDouble / globalN
     // Keymap-pruned key resolution: when slice paths are given and every
     // slice maintains a keymap over exactly `tieCols`, single-document
     // reads (moreLikeThis / termVectors / explainScore) locate the home
@@ -1120,43 +1011,24 @@ object Federation {
     // hashed key bucket per slice, never the docs table. Probe values are
     // cast to the docs schema's key types so e.g. CLI string keys hash
     // into the same bucket the builder wrote.
-    val keyLookup: Option[Seq[Any] => Option[(Int, Long)]] =
+    val keyLookup: Option[Seq[Any] => Seq[(Int, Long)]] =
       if (paths.nonEmpty && slices.forall(_.manifest.keyCols == tieCols))
         Some { key =>
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
           val spark = slices.head.index.docs.sparkSession
-          val hits: Seq[(Int, Long)] = Await.result(
-            Future.sequence(paths.zipWithIndex.map { case (p, i) =>
-              Future {
-                val schema = slices(i).index.docs.schema
-                val probe = spark.range(1).select(
-                  tieCols.zip(key).map { case (c, v) =>
-                    lit(v).cast(schema(c).dataType).as(c) }: _*)
-                graft.storage.ParquetIndexStorage.lookupOrds(spark, p, probe)
-                  .select("doc_ord").collect().toSeq
-                  .map(r => (i, r.getLong(0)))
-              }
-            }), Duration.Inf).flatten
-          require(hits.size <= 1,
-            s"tie key ${key.mkString(",")} matches ${hits.size} documents — " +
-              "a stable key must be unique across slices")
-          hits.headOption
+          concurrently(paths.zipWithIndex) { case (p, i) =>
+            val schema = slices(i).index.docs.schema
+            val probe = spark.range(1).select(
+              tieCols.zip(key).map { case (c, v) =>
+                lit(v).cast(schema(c).dataType).as(c) }: _*)
+            graft.storage.ParquetIndexStorage.lookupOrds(spark, p, probe)
+              .select("doc_ord").collect().toSeq
+              .map(r => (i, r.getLong(0)))
+          }.flatten
         }
       else None
-    new Federation(
-      slices.map { p =>
-        new Searcher(
-          p.index.copy(numDocs = globalN, avgDocLen = avgdl,
-            totalTokens = totalTokens),
-          analyzer,
-          BlockParams(blockSize = p.manifest.blockSize,
-            bucketSpan = p.manifest.bucketSpan,
-            k1 = p.manifest.k1, b = p.manifest.b),
-          Some(p.blocks), sortUnranked = false,
-          dGroupSpan = p.manifest.dGroupSpan)
-      },
-      tieCols, keyLookup)
+    val global = withGlobalStats(slices.map(_.index))
+    new Federation(slices.zip(global).map { case (p, ix) =>
+      Searcher(p.copy(index = ix), analyzer, sortUnranked = false)
+    }, tieCols, keyLookup)
   }
 }

@@ -142,7 +142,7 @@ final class Searcher(
     // (resolveGlobal), so per-slice query compilation stops re-running a
     // serial dictionary job per slice.
     preResolved: Option[(Set[String], Map[String, ResolvedTerm])] = None
-) {
+) extends QueryTarget {
 
   private val spark = index.docs.sparkSession
   import spark.implicits._
@@ -176,7 +176,7 @@ final class Searcher(
     * footer-scanned every leaf: measured 23.6 s vs 5.5 s exhaustive for 8
     * cold queries at 10^6 turns). Pinned or in-memory blocks scan the
     * cached table — the term_id filter inside BlockMaxWand prunes there. */
-  private def blocksFor(rts: Seq[ResolvedTerm]): Dataset[PostingBlockRow] =
+  private[query] def blocksFor(rts: Seq[ResolvedTerm]): Dataset[PostingBlockRow] =
     preBuiltBlocksByTerm match {
       case _ if servingByBucket.isDefined => servingByBucket.get
       case Some(raw) if !blocksPinned && rts.nonEmpty && rts.forall(_.bucket >= 0) =>

@@ -620,4 +620,39 @@ class MainSpec extends SparkSpec {
     assert(cfn == 0 && fsn.drop(1).map(_.split("\t").last).sorted.toSeq ==
       sn.drop(1).map(_.split("\t").last).sorted.toSeq, s"fed=$fsn mono=$sn")
   }
+
+  test("every doc-row search mode: a federation == the monolithic index") {
+    val (m1, s1, s2) = fedFixtures()
+    // query text per mode where "spark join" would not exercise it
+    val queries = Map("phrase" -> "join table", "phrase-prefix" -> "spark jo",
+      "qs" -> "join AND NOT broadcast", "qs-ranked" -> "join -broadcast",
+      "prefix" -> "sh", "fuzzy" -> "spork", "wildcard" -> "sp*k",
+      "regexp" -> "sp.rk|jo.n", "range" -> "join,spark")
+    val docModes = Main.searchModes.filter(_._2.docRows)
+    assert(Set("bm25", "tfidf", "wand", "mlt").subsetOf(docModes.keySet))
+    for ((name, mode) <- docModes) {
+      // (conv_id, turn_idx) and score of each printed row, in order
+      def rows(index: String, doc: String): Seq[((String, String), Double)] = {
+        val query = if (name == "mlt") doc else queries.getOrElse(name, "spark join")
+        val (code, out) = captured("search", "--index", index, "--query", query,
+          "--mode", name, "--k", "5", "--rescore-phrase", "join table")
+        assert(code == 0, s"$name: ${out.mkString("\n")}")
+        val header = out.head.split("\t").toSeq
+        out.tail.map { l =>
+          val f = l.split("\t", -1)
+          ((f(header.indexOf("conv_id")), f(header.indexOf("turn_idx"))),
+            if (mode.ranked) f(header.indexOf("score")).toDouble else 0.0)
+        }
+      }
+      val mono = rows(m1, "0")
+      val fed = rows(s"$s1,$s2", "c1,0")
+      assert(mono.nonEmpty, s"$name returned no rows")
+      assert(fed.map(_._1) == mono.map(_._1), s"$name: fed=$fed mono=$mono")
+      fed.zip(mono).foreach { case (f, m) => assert(math.abs(f._2 - m._2) < 1e-9, name) }
+    }
+    val (code, out) = captured("search", "--index", s"$s1,$s2",
+      "--query", "spark", "--mode", "context")
+    assert(code == 2 && out.head.contains("mode 'context' is not federated"),
+      out.mkString("\n"))
+  }
 }
