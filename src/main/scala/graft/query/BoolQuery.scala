@@ -37,8 +37,7 @@ final case class BTerm(keyword: String, logic: Logic = And,
 final case class BPhrase(phrase: String, boost: Double = 1.0,
     slop: Int = 0) extends BoolQuery {
   require(boost > 0, s"boost must be > 0, got $boost")
-  require(slop >= 0 && slop <= Searcher.MaxSlop,
-    s"slop must be in [0, ${Searcher.MaxSlop}], got $slop")
+  Phrase.requireSlop(slop)
 }
 
 /** Fuzzy leaf (`term~2` in the query-string syntax): matches docs containing

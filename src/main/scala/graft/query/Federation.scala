@@ -794,6 +794,8 @@ final class Federation private (
     * weights, source doc excluded by key. */
   def moreLikeThis(key: Seq[Any], maxQueryTerms: Int = 10,
       k: Int = 10): DataFrame = {
+    require(k >= 0 && maxQueryTerms >= 0,
+      s"k and maxQueryTerms must be >= 0, got k=$k, maxQueryTerms=$maxQueryTerms")
     val located = locate(key)
     if (located.isEmpty) return emptyDocs(withScore = true)
     val (home, docOrd) = located.get

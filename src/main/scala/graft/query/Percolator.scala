@@ -61,10 +61,13 @@ object Percolator {
   /** Tree percolation: standing [[BoolQuery]] trees (the FULL compound
     * surface — AND/OR/NOT over match and phrase leaves) evaluated against
     * each arriving doc as a pure column expression over its analyzed token
-    * stream: term leaves via `array_contains`, phrase leaves via a
-    * contiguous-window scan of the positional token array. Zero shuffle,
-    * zero state — streamable in plain append mode like [[matchesStateless]].
-    * Exactly [[Searcher.boolQuery]] semantics per document (parity-tested),
+    * stream: term leaves via `array_contains`, phrase leaves via
+    * [[Phrase.hit]] over the slot positions the token array itself yields
+    * (a UDF: Spark's higher-order array functions are `CodegenFallback`, so
+    * a Column scan of the tokens would be interpreted all the same). A null
+    * or empty token array matches no phrase. Zero shuffle, zero state —
+    * streamable in plain append mode like [[matchesStateless]]. Exactly
+    * [[Searcher.boolQuery]] semantics per document (parity-tested),
     * including pure negation, with no index required. Plan size grows with
     * total leaf count; for thousands of FLAT queries prefer [[matches]].
     *
@@ -75,44 +78,13 @@ object Percolator {
       textCol: String = "text"): DataFrame = {
     val toks = analyzer.termsColumn(col(textCol))
 
-    def phraseCol(ts: Seq[String]): Column =
-      if (ts.isEmpty) lit(false)
-      else if (ts.size == 1) array_contains(toks, ts.head)
-      else {
-        val n = ts.size
-        // element_at is 1-based; sequence(a,b) with a>b counts DOWN, so the
-        // window scan must be guarded against docs shorter than the phrase
-        val windows = sequence(lit(1), size(toks) - lit(n - 1))
-        val hit = exists(windows, i =>
-          ts.zipWithIndex.map { case (t, j) =>
-            element_at(toks, (i + lit(j)).cast("int")) === lit(t)
-          }.reduce(_ && _))
-        when(size(toks) >= lit(n), hit).otherwise(lit(false))
-      }
-
-    // sloppy phrase over the raw token stream: shifted occurrence sets per
-    // slot, then the SAME shared window predicate as Searcher.phraseQuery
-    def sloppyPhraseCol(ts: Seq[String], slop: Int): Column =
-      if (ts.isEmpty) lit(false)
-      else {
-        val idxs = sequence(lit(0), size(toks) - 1) // guarded below
-        val rels = array(ts.zipWithIndex.map { case (t, i) =>
-          filter(transform(idxs, p =>
-            when(element_at(toks, (p + 1).cast("int")) === lit(t), p - i)
-              .otherwise(lit(null).cast("int"))), x => x.isNotNull)
-        }: _*)
-        when(size(toks) > 0, Searcher.slopWindowHit(rels, lit(slop)))
-          .otherwise(lit(false))
-      }
-
     def compile(q: BoolQuery): Column = q match {
       case BTerm(kw, logic, _) => // boost only affects scoring; percolation is boolean
         val ts = analyzer.terms(kw).distinct
         if (ts.isEmpty) lit(false)
         else if (logic == And) ts.map(t => array_contains(toks, t)).reduce(_ && _)
         else arrays_overlap(toks, array(ts.map(lit): _*))
-      case BPhrase(p, _, 0)    => phraseCol(analyzer.terms(p))
-      case BPhrase(p, _, slop) => sloppyPhraseCol(analyzer.terms(p), slop)
+      case BPhrase(p, _, slop) => Phrase.tokensColumn(toks, analyzer.terms(p), slop)
       case BFuzzy(t0, maxEdits, _, _) => // against the DOC's own tokens — the
         // index-free analogue of the dictionary expansion (no truncation,
         // see BFuzzy scaladoc); term analyzer-normalized like the tree path

@@ -62,16 +62,6 @@ object Searcher {
     * nothing; 1e6 is far past any real document's length. */
   val MaxSlop: Int = 1000000
 
-  /** The unordered sloppy-window hit predicate, shared by
-    * `phraseQuery(slop)`, the boolean-tree phrase leaves (slop as a
-    * per-leaf Column), and the index-free Percolator evaluation:
-    * over `rels` (array of per-slot shifted position sets), ∃ an anchor
-    * (the chosen minimum — a member of some set) covering one pick per
-    * slot within [a, a+slop]. */
-  private[query] def slopWindowHit(rels: Column, slop: Column): Column =
-    exists(flatten(rels), a =>
-      forall(rels, rl => exists(rl, r => r >= a && r <= a + slop)))
-
   /** Dictionary predicate for a fuzzy expansion: the length-window
     * prefilter keeps the edit-distance evaluation off terms that cannot
     * qualify. Shared by the monolithic expansion ([[Searcher.fuzzyQuery]],
@@ -648,13 +638,11 @@ final class Searcher(
     * [[servingMatchLocal]]: when the postings are pinned AND the
     * dictionary's Σ df bound proves the terms' posting rows driver-sized,
     * ONE cached-scan job collects (term_id, doc_ord, positions) for the
-    * phrase terms and the shift-and-intersect / slop-window / in-order
-    * chain — the exact semantics of [[phraseMatch]]'s Column folds,
-    * replicated in plain Scala and pinned row-identical by the serving
-    * phrase parity spec — runs on the driver; the result is the same
-    * LocalRelation fetch as the match path (2 jobs/query total). Hot-term
-    * phrases exceed the bound and keep the distributed plan, which is the
-    * right shape for corpus-sized candidate sets. */
+    * phrase terms, and [[Phrase.hit]] — the same predicate the distributed
+    * plan's UDF applies — decides each doc on the driver; the result is
+    * the same LocalRelation fetch as the match path (2 jobs/query total).
+    * Hot-term phrases exceed the bound and keep the distributed plan,
+    * which is the right shape for corpus-sized candidate sets. */
   private def servingPhraseLocal(phrase: String, slop: Int,
       inOrder: Boolean): Option[DataFrame] = {
     if (servingPostings.isEmpty) return None
@@ -667,60 +655,16 @@ final class Searcher(
       val byTerm = rts.map(rt => rt.term -> rt.termId).toMap
       qTerms.zipWithIndex.map { case (t, i) => (byTerm(t), i) }
     }
-    val k = slots.size
-    val posRows = postingsFor(rts)
-      .select(col("term_id"), col("doc_ord"), col("positions"))
-      .collect()
     // per doc: term_id -> positions (one posting row per (term, doc))
-    val byDoc = new java.util.HashMap[Long, java.util.HashMap[Long, Array[Int]]]()
-    posRows.foreach { r =>
-      val doc = r.getLong(1)
-      var m = byDoc.get(doc)
-      if (m == null) { m = new java.util.HashMap[Long, Array[Int]](); byDoc.put(doc, m) }
-      m.put(r.getLong(0), r.getSeq[Int](2).toArray)
-    }
-    val ords = scala.collection.mutable.ArrayBuilder.make[Long]
-    val it = byDoc.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      val m = e.getValue
-      if (m.size == rts.size) { // every distinct term present
-        // per-slot shifted position sets, slot order = q_pos order
-        val rels: Seq[Array[Int]] = slots.map { case (tid, qp) =>
-          m.get(tid).map(_ - qp)
-        }
-        val hit =
-          if (slop == 0) {
-            // fold intersect of the shifted sets (array_intersect semantics)
-            var acc: Set[Int] = rels.head.toSet
-            var i = 1
-            while (i < k && acc.nonEmpty) { acc = acc.intersect(rels(i).toSet); i += 1 }
-            acc.nonEmpty
-          } else if (!inOrder) {
-            // slopWindowHit: ∃ anchor in flatten(rels): every slot has a
-            // member in [a, a+slop]
-            rels.iterator.flatten.exists(a =>
-              rels.forall(_.exists(r => r >= a && r <= a + slop)))
-          } else {
-            // ordered greedy-min chain, exactly the Column fold: anchor from
-            // slot 0's set; each later slot takes the smallest member in
-            // [prev, a+slop]; chain survives = hit
-            rels.head.exists { a =>
-              var prev = a
-              var ok = true
-              var i = 1
-              while (ok && i < k) {
-                val cands = rels(i).filter(r => r >= prev && r <= a + slop)
-                if (cands.isEmpty) ok = false else prev = cands.min
-                i += 1
-              }
-              ok
-            }
-          }
-        if (hit) ords += e.getKey
-      }
-    }
-    Some(localDocsFetch(ords.result()))
+    val byDoc = postingsFor(rts)
+      .select(col("term_id"), col("doc_ord"), col("positions"))
+      .collect().groupMap(_.getLong(1))(r => r.getLong(0) -> r.getSeq[Int](2))
+      .view.mapValues(_.toMap)
+    // every distinct term present, and the per-slot shifted sets hit
+    val ords = byDoc.collect { case (doc, m) if m.size == rts.size &&
+        Phrase.hit(slots.map { case (tid, qp) => m(tid).map(_ - qp).toArray }.toArray,
+          slop, inOrder) => doc }
+    Some(localDocsFetch(ords.toArray))
   }
 
   /** Total-hits count (the ES `_count` API / `track_total_hits`): how many
@@ -877,12 +821,11 @@ final class Searcher(
     * Work shape: one pruned postings scan for the exact terms plus the
     * expansion set, one (doc, slot) aggregation that UNIONS positions per
     * slot (the only change vs the single-term-per-slot phrase plan), one
-    * doc-level window fold. `ranked` scores matched docs with TF-IDF over
+    * doc-level [[Phrase.hit]]. `ranked` scores matched docs with TF-IDF over
     * the exact terms + expansions, like the ranked phrase path. */
   def matchPhrasePrefix(phrase: String, slop: Int = 0,
       maxExpansions: Int = 128, ranked: Boolean = false): DataFrame = {
-    require(slop >= 0 && slop <= Searcher.MaxSlop,
-      s"slop must be in [0, ${Searcher.MaxSlop}], got $slop")
+    Phrase.requireSlop(slop)
     require(maxExpansions > 0, s"maxExpansions must be > 0, got $maxExpansions")
     val qTerms = analyzer.terms(phrase)
     if (qTerms.isEmpty) return emptyDocs(ranked)
@@ -902,8 +845,7 @@ final class Searcher(
     * repeated), `expRts` the final-slot expansion set. */
   private[query] def matchPhrasePrefixResolved(exactInOrder: Seq[ResolvedTerm],
       expRts: Seq[ResolvedTerm], slop: Int, ranked: Boolean): DataFrame = {
-    require(slop >= 0 && slop <= Searcher.MaxSlop,
-      s"slop must be in [0, ${Searcher.MaxSlop}], got $slop")
+    Phrase.requireSlop(slop)
     if (expRts.isEmpty) return emptyDocs(ranked)
 
     val k = exactInOrder.size + 1
@@ -917,23 +859,7 @@ final class Searcher(
       .join(broadcast(slots.toDF("term_id", "q_pos")), "term_id")
       .groupBy(col("doc_ord"), col("q_pos"))
       .agg(array_distinct(flatten(collect_list(col("positions")))).as("positions"))
-    val grouped = perSlot
-      .groupBy(col("doc_ord"))
-      .agg(count(lit(1)).as("nslots"),
-        collect_list(struct(col("q_pos"), col("positions"))).as("pls"))
-      .filter(col("nslots") === lit(k))
-
-    val rel = (x: Column) =>
-      transform(x.getField("positions"), p => p - x.getField("q_pos"))
-    val matched =
-      if (slop == 0)
-        grouped.withColumn("common",
-          aggregate(col("pls"), lit(null).cast("array<int>"),
-            (acc, x) => when(acc.isNull, rel(x)).otherwise(array_intersect(acc, rel(x)))))
-          .filter(size(col("common")) > 0)
-      else
-        grouped.filter(Searcher.slopWindowHit(
-          transform(col("pls"), x => rel(x)), lit(slop)))
+    val matched = phraseHits(perSlot, k, slop, inOrder = false)
 
     if (!ranked) fetchDocs(matched.withColumn("score", lit(0.0)), ranked = false)
     else fetchDocs(
@@ -988,6 +914,8 @@ final class Searcher(
     * persisted layout, never a corpus scan) plus a vocab-bounded dictionary
     * lookup; the search is the ordinary pruned BM25 OR plan. */
   def moreLikeThis(docOrd: Long, maxQueryTerms: Int = 10, k: Int = 10): DataFrame = {
+    require(k >= 0 && maxQueryTerms >= 0,
+      s"k and maxQueryTerms must be >= 0, got k=$k, maxQueryTerms=$maxQueryTerms")
     val src0 = index.postings.filter(col("doc_ord") === lit(docOrd))
     val src = if (dGroupSpan > 0 && index.postings.columns.contains("d_group"))
       src0.filter(col("d_group") === lit(docOrd / dGroupSpan)) else src0
@@ -1298,6 +1226,7 @@ final class Searcher(
     * the matched rows' text is re-analyzed, a per-row native projection.
     * Windows clamp at document edges. */
   def snippet(keyword: String, window: Int = 2): DataFrame = {
+    require(window >= 0, s"window must be >= 0, got $window")
     val qTerms = analyzer.terms(keyword).distinct
     val rts = resolve(qTerms)
     val empty = index.docs.limit(0)
@@ -1307,45 +1236,41 @@ final class Searcher(
       .groupBy(col("doc_ord"))
       .agg(min(element_at(col("positions"), 1)).cast("long").as("first_pos"))
     val toks = analyzer.termsColumn(col("text"))
-    // window is [p-w, p+w] with BOTH bounds clamped (slice clamps the end);
-    // positions are 0-based ordinals, slice is 1-based
+    // window is [p-w, p+w] with BOTH bounds clamped (slice clamps the end;
+    // the long end is capped so the int length cannot overflow); positions
+    // are 0-based ordinals, slice is 1-based
     val start0 = greatest(col("first_pos") - window, lit(0L))
+    val len = least(col("first_pos") + window + 1, lit(Int.MaxValue.toLong)) - start0
     index.docs.join(firstPos, "doc_ord")
       .withColumn("snippet",
-        array_join(slice(toks, (start0 + 1).cast("int"),
-          (col("first_pos") + window - start0 + 1).cast("int")), " "))
+        array_join(slice(toks, (start0 + 1).cast("int"), len.cast("int")), " "))
   }
 
   /** PhraseQuery: all terms must resolve (`searcher.go:230-232`), docs must
     * contain every query position's term, and the position sets — each
     * shifted left by its query ordinal — must share a common element
-    * (`searcher.go:277-314`). The shift-and-intersect runs as a native
-    * higher-order `aggregate(array_intersect)` inside the doc-level
-    * aggregation: no UDF, no driver loop. Single-term phrases degenerate to
-    * match-any (`searcher_test.go:209-218`).
+    * (`searcher.go:277-314`). Single-term phrases degenerate to match-any
+    * (`searcher_test.go:209-218`).
     *
     * `slop > 0` relaxes the phrase to window semantics: a doc matches iff
     * some choice of one shifted position per query slot spans at most `slop`
-    * (max − min ≤ slop; slop=0 is the exact phrase). Evaluated as a native
-    * `exists/forall` over the shifted sets anchored at each candidate
-    * minimum — same O(k·p²) class as the reference's `hasCommon` scan, still
-    * inside the one doc-level aggregation. Unlike Lucene's sloppy phrase,
-    * repeated-term slots may align to the SAME occurrence when the window
-    * permits (window semantics, pinned in SearcherSpec).
+    * (max − min ≤ slop; slop=0 is the exact phrase). Unlike Lucene's sloppy
+    * phrase, repeated-term slots may align to the SAME occurrence when the
+    * window permits (window semantics, pinned in SearcherSpec).
     *
     * `inOrder = true` (Lucene `span_near(inOrder=true)`) additionally
     * requires the terms to occur in QUERY ORDER at strictly increasing text
     * positions with at most `slop` total gap: ∃ a non-decreasing chain of
-    * shifted positions, one per slot, spanning ≤ slop. Decided by a
-    * greedy-min fold over the slot-ordered shifted sets (picking the
-    * smallest feasible continuation never hurts later slots), per anchor —
-    * same complexity class, same single aggregation. Strict position
-    * increase means repeated-term slots need DISTINCT occurrences here,
-    * unlike the unordered window. At slop 0 ordered ≡ unordered ≡ exact. */
+    * shifted positions, one per slot, spanning ≤ slop. Repeated-term slots
+    * then need DISTINCT occurrences. At slop 0 ordered ≡ unordered ≡ exact.
+    *
+    * All three are [[Phrase.hit]], applied as a UDF to the doc-level
+    * `collect_list` of slot positions inside the one doc-level aggregation:
+    * Spark's higher-order array functions are `CodegenFallback`
+    * (interpreted), so Column folds over the same list would be no faster. */
   def phraseQuery(phrase: String, ranked: Boolean = false, slop: Int = 0,
       inOrder: Boolean = false): DataFrame = {
-    require(slop >= 0 && slop <= Searcher.MaxSlop,
-      s"slop must be in [0, ${Searcher.MaxSlop}], got $slop")
+    Phrase.requireSlop(slop)
     if (!ranked) servingPhraseLocal(phrase, slop, inOrder) match {
       case Some(df) => return df
       case None     =>
@@ -1373,8 +1298,7 @@ final class Searcher(
     * corpus-wide postings. */
   private[query] def phraseMatch(phrase: String, slop: Int, inOrder: Boolean,
       among: Option[DataFrame]): Option[(DataFrame, Seq[ResolvedTerm])] = {
-    require(slop >= 0 && slop <= Searcher.MaxSlop,
-      s"slop must be in [0, ${Searcher.MaxSlop}], got $slop")
+    Phrase.requireSlop(slop)
     val qTerms = analyzer.terms(phrase) // NOT deduped: each ordinal matters
     if (qTerms.isEmpty) return None
     val rtsByTerm = resolve(qTerms.distinct).map(rt => rt.term -> rt).toMap
@@ -1389,56 +1313,22 @@ final class Searcher(
         Seq("doc_ord"), "left_semi")
       case None => base
     }
-    val cand = restricted
-      .join(broadcast(slotsDf), "term_id")
-      .select(col("doc_ord"), col("q_pos"), col("positions"), col("tf"), col("term_id"))
-
-    val rel = (x: Column) =>
-      transform(x.getField("positions"), p => p - x.getField("q_pos"))
-    val grouped = cand
-      .groupBy(col("doc_ord"))
-      .agg(
-        count(lit(1)).as("nslots"),
-        collect_list(struct(col("q_pos"), col("positions"))).as("pls")
-      )
-      .filter(col("nslots") === lit(k))
-
-    val matched =
-      if (slop == 0)
-        // exact: O(k·p) intersect of the shifted sets
-        grouped
-          .withColumn(
-            "common",
-            aggregate(
-              col("pls"),
-              lit(null).cast("array<int>"),
-              (acc, x) => when(acc.isNull, rel(x)).otherwise(array_intersect(acc, rel(x)))
-            )
-          )
-          .filter(size(col("common")) > 0)
-      else if (!inOrder) {
-        // sloppy: the shared unordered-window predicate
-        val rels = transform(col("pls"), x => rel(x))
-        grouped.filter(Searcher.slopWindowHit(rels, lit(slop)))
-      } else {
-        // ordered sloppy: ∃ a ∈ R_1 and a non-decreasing chain r_2..r_k
-        // (r_i ∈ R_i ∩ [prev, a+slop]); greedy-min per step is lossless.
-        // collect_list order is nondeterministic — sort slots by q_pos
-        // (struct ordering: q_pos is the leading field) before folding.
-        val rels = transform(array_sort(col("pls")), x => rel(x))
-        val head = element_at(rels, 1)
-        val tail = slice(rels, 2, k - 1) // empty for single-slot phrases
-        grouped.filter(
-          exists(head, a =>
-            aggregate(tail, a.cast("int"), (prev, rl) =>
-              when(prev.isNull, lit(null).cast("int"))
-                .otherwise(array_min(
-                  filter(rl, r => r >= prev && r <= a + slop)))
-            ).isNotNull))
-      }
-
-    Some((matched.select("doc_ord"), rtsByTerm.values.toSeq))
+    val cand = restricted.join(broadcast(slotsDf), "term_id")
+    Some((phraseHits(cand, k, slop, inOrder), rtsByTerm.values.toSeq))
   }
+
+  /** The doc-level tail of every phrase plan: one group per doc of its
+    * (doc_ord, q_pos, positions) slot rows, kept when all `k` slots are
+    * present and [[Phrase.hit]] holds. Returns one column, `doc_ord`. */
+  private def phraseHits(slotRows: DataFrame, k: Int, slop: Int,
+      inOrder: Boolean): DataFrame =
+    slotRows
+      .groupBy(col("doc_ord"))
+      .agg(count(lit(1)).as("nslots"),
+        collect_list(struct(col("q_pos"), col("positions"))).as("pls"))
+      .filter(col("nslots") === lit(k))
+      .filter(Phrase.column(col("pls"), lit(slop), inOrder))
+      .select("doc_ord")
 
   /** Exhaustive BM25 top-k (OR semantics over the query terms): the oracle
     * plan the block-max WAND path must be rank-identical to. Compiles to
@@ -1932,8 +1822,8 @@ final class Searcher(
     *   2. one postings scan, partition-pruned to those terms (positions are
     *      read only when a phrase leaf exists);
     *   3. one (doc_ord, leaf_id) aggregation decides each leaf: distinct
-    *      matched slots for term leaves, slots + shifted-position intersect
-    *      for phrase leaves;
+    *      matched slots for term leaves, slots + [[Phrase.hit]] at the
+    *      leaf's slop for phrase leaves;
     *   4. one doc_ord aggregation folds leaf outcomes into a bitmask, and
     *      the tree — compiled to a codegen'd boolean expression over the
     *      mask — filters it.
@@ -2115,19 +2005,10 @@ final class Searcher(
       else g.agg(count(lit(1)).as("nrows"))
     }
 
+    // each phrase leaf is decided by its own slop column
     val phraseOk =
       if (!hasPhrase) lit(true)
-      else {
-        val rel = (x: Column) =>
-          transform(x.getField("positions"), p => p - x.getField("q_pos"))
-        val rels = transform(col("pls"), x => rel(x))
-        // slop=0: O(k·p) intersect; slop>0: the shared window predicate,
-        // parameterized by the leaf's slop column
-        when(col("slop") === 0,
-          size(aggregate(col("pls"), lit(null).cast("array<int>"),
-            (acc, x) => when(acc.isNull, rel(x)).otherwise(array_intersect(acc, rel(x))))) > 0)
-          .otherwise(Searcher.slopWindowHit(rels, col("slop")))
-      }
+      else Phrase.column(col("pls"), col("slop"), inOrder = false)
     val matchedCol =
       (col("kind") === "o") ||
       (col("kind") === "a" && col("nrows") === col("req")) ||

@@ -149,6 +149,31 @@ class ExpansionQuerySpec extends SparkSpec {
     assert(e.columns.contains("snippet") && e.count() == 0)
   }
 
+  test("snippet/moreLikeThis reject bad arguments on the driver; a huge window clamps") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sDocs = Seq((0L, 1L, "alpha beta gamma delta epsilon zeta"), (1L, 2L, "delta at start"))
+      .toDF("doc_ord", "doc_id", "text")
+    val s = new Searcher(IndexBuilder.build(sDocs, analyzer).cache(), analyzer)
+    s.snippet("delta").collect() // warm: the index is cached before counting
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Thread.sleep(300); jobs.set(0)
+      intercept[IllegalArgumentException](s.snippet("delta", window = -1).collect())
+      intercept[IllegalArgumentException](s.moreLikeThis(0L, k = -1).collect())
+      intercept[IllegalArgumentException](s.moreLikeThis(0L, maxQueryTerms = -1).collect())
+      Thread.sleep(500)
+      assert(jobs.get() == 0, s"argument errors ran ${jobs.get()} Spark jobs first")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val whole = s.snippet("delta", window = Int.MaxValue)
+      .select("doc_id", "snippet").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toMap
+    assert(whole == Map(1L -> "alpha beta gamma delta epsilon zeta", 2L -> "delta at start"))
+  }
+
   test("didYouMean: corrections ranked by (distance, df desc, term)") {
     // vocab: ruby(df 3), php(3), js(2), go(4), rust(1)
     val dym = searcher.didYouMean("rubi", maxEdits = 2, n = 5)

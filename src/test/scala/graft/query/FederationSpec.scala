@@ -731,6 +731,7 @@ class FederationSpec extends SparkSpec {
       }
     }
     assert(fed.moreLikeThis(Seq(999L)).count() == 0) // unknown key
+    intercept[IllegalArgumentException](fed.moreLikeThis(Seq(7L), k = -1))
   }
 
   test("matchPhrasePrefix: federated == monolithic (global-vocabulary " +
