@@ -139,6 +139,17 @@ object TextStats {
       best.getField("cnt").as("marker_hits"))
   }
 
+  /** Trimmed non-empty lines of a text column. */
+  private def textLines(text: Column): Column =
+    filter(transform(split(text, "\n"), x => trim(x)), x => x =!= "")
+
+  /** Adjacent-token bigrams ("a b") of a token array; empty below 2 tokens. */
+  private def bigrams(toks: Column): Column =
+    when(size(toks) >= 2,
+      zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
+        (a, b) => concat(a, lit(" "), b)))
+      .otherwise(typedLit(Seq.empty[String]))
+
   /** Gopher/RefinedWeb-style repetition signals — the boilerplate
     * detectors a web-scale quality filter runs before training:
     *  - `dup_line_ratio`: 1 − distinct/total over non-empty trimmed lines
@@ -150,18 +161,13 @@ object TextStats {
     * aggregations — NOT an O(tokens²) per-row array fold, which would blow
     * up on long documents. Docs with <2 tokens report 0. */
   def repetition(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val lines = filter(transform(split(col(textCol), "\n"), x => trim(x)), x => x =!= "")
-    val toks = tokensCol(col(textCol))
-    val grams = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(typedLit(Seq.empty[String]))
+    val lines = textLines(col(textCol))
     val base = docs.select(col(idCol),
       size(lines).cast("long").as("n_lines"),
       round(when(size(lines) > 0,
         lit(1.0) - size(array_distinct(lines)).cast("double") / size(lines).cast("double"))
         .otherwise(lit(0.0)), 6).as("dup_line_ratio"),
-      grams.as("grams"))
+      bigrams(tokensCol(col(textCol))).as("grams"))
     val tops = base.select(col(idCol), explode(col("grams")).as("gram"))
       .groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("c"))
       .groupBy(col(idCol))
@@ -182,32 +188,43 @@ object TextStats {
     *    most frequent token bigram (ties broken lexicographically — the
     *    tie rule must be deterministic for cross-engine oracles), over the
     *    doc's total token characters.
-    * Per-doc O(L²)/O(T²) array scans — lines/tokens per doc are bounded,
-    * so the corpus pass stays one map-only scan, no shuffle. */
+    * Each doc is split into lines and tokens once; per-(doc, line) and
+    * per-(doc, bigram) counts come from explode + map-side-combined
+    * aggregations like [[repetition]]'s, so the work is linear in the
+    * doc's length (a per-row fold counting every element against every
+    * other is quadratic per count and interpreted — Spark's higher-order
+    * array functions are CodegenFallback). */
   def repetitionChars(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val lines = filter(transform(split(col(textCol), "\n"), x => trim(x)), x => x =!= "")
-    val lineChars = aggregate(lines, lit(0L), (a, l) => a + length(l))
-    val dupChars = aggregate(lines, lit(0L), (a, l) =>
-      a + when(size(filter(lines, m => m === l)) > 1, length(l).cast("long")).otherwise(lit(0L)))
-    val toks = tokensCol(col(textCol))
-    val tokChars = aggregate(toks, lit(0L), (a, t) => a + length(t))
-    val grams = when(size(toks) >= 2,
-      zip_with(slice(toks, lit(1), size(toks) - 1), slice(toks, lit(2), size(toks) - 1),
-        (a, b) => concat(a, lit(" "), b)))
-      .otherwise(typedLit(Seq.empty[String]))
-    val counts = transform(grams, g => size(filter(grams, h => h === g)))
-    val maxCnt = coalesce(array_max(counts), lit(0))
-    val top = array_min(filter(grams, g =>
-      size(filter(grams, h => h === g)) === maxCnt))
-    docs.select(col(idCol),
-      round(when(lineChars > 0, dupChars.cast("double") / lineChars.cast("double"))
-        .otherwise(lit(0.0)), 6).as("dup_line_char_frac"),
-      round(when(tokChars > 0 && maxCnt > 0,
-        // a bigram's token characters = its string length minus the joiner;
-        // overlapping occurrences can over-count, so clamp to 1
-        least(lit(1.0), (maxCnt.cast("double") * (length(top) - lit(1)).cast("double"))
-          / tokChars.cast("double")))
-        .otherwise(lit(0.0)), 6).as("top_bigram_char_frac"))
+    val base = docs.select(col(idCol), textLines(col(textCol)).as("lines"),
+      tokensCol(col(textCol)).as("toks"))
+    val lineChars = base.select(col(idCol), explode(col("lines")).as("line"))
+      .groupBy(col(idCol), col("line")).agg(count(lit(1)).as("c"))
+      .groupBy(col(idCol))
+      .agg(sum(col("c") * length(col("line"))).as("line_chars"),
+        sum(when(col("c") > 1, col("c") * length(col("line"))).otherwise(lit(0L)))
+          .as("dup_chars"))
+    // the most frequent bigram, ties to the lexicographically least: the
+    // minimum of (−count, gram)
+    val topGram = base.select(col(idCol), explode(bigrams(col("toks"))).as("gram"))
+      .groupBy(col(idCol), col("gram")).agg(count(lit(1)).as("c"))
+      .groupBy(col(idCol))
+      .agg(min(struct(negate(col("c")).as("nc"), col("gram"))).as("top"))
+    val maxCnt = coalesce(negate(col("top.nc")), lit(0L))
+    // a bigram's token characters = its string length minus the joiner
+    val topChars = (length(col("top.gram")) - lit(1)).cast("double")
+    val tokChars = col("tok_chars")
+    base.select(col(idCol),
+        aggregate(col("toks"), lit(0L), (a, t) => a + length(t)).as("tok_chars"))
+      .join(lineChars, Seq(idCol), "left")
+      .join(topGram, Seq(idCol), "left")
+      .select(col(idCol),
+        round(when(col("line_chars") > 0,
+          col("dup_chars").cast("double") / col("line_chars").cast("double"))
+          .otherwise(lit(0.0)), 6).as("dup_line_char_frac"),
+        round(when(tokChars > 0 && maxCnt > 0,
+          // overlapping occurrences can over-count, so clamp to 1
+          least(lit(1.0), (maxCnt.cast("double") * topChars) / tokChars.cast("double")))
+          .otherwise(lit(0.0)), 6).as("top_bigram_char_frac"))
   }
 
   /** Corpus-unigram language-model quality score — the classic LM filter

@@ -1,24 +1,11 @@
 package graft.query
 
 import graft.index.{BlockParams, PostingBlockRow, PostingBlocks}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
-/** Distributed block-max WAND top-k (SURVEY.md §4.3 item 2).
-  *
-  * Work is partitioned over doc-range buckets (each bucket holds all query
-  * terms' blocks for its doc range, co-located at build time): every bucket
-  * runs an independent WAND with its own k-heap and emits at most k local
-  * candidates; the global `orderBy(score desc, doc_ord asc).limit(k)` merge
-  * then touches only `k × nBuckets` rows — no partition ever materializes
-  * full posting intersections. Pruning uses per-term global upper bounds for
-  * pivot selection and per-block maxima for skip decisions, both strict
-  * (`< threshold`) and padded by 1 ulp-scale epsilon against float
-  * re-association, so ties survive and the result is rank-identical to the
-  * exhaustive BM25 plan — property-tested in BlockMaxWandSpec.
-  */
 /** Pruning-effectiveness counters (Spark accumulators, aggregated across
   * partitions): `blocksTotal` = blocks of the query terms that an exhaustive
   * scorer would decode; `blocksDecoded` = blocks WAND actually decoded.
@@ -39,6 +26,25 @@ object WandMetrics {
       spark.sparkContext.longAccumulator("wand.blocksDecoded"))
 }
 
+/** Distributed block-max WAND top-k (SURVEY.md §4.3 item 2).
+  *
+  * Work is partitioned over doc-range buckets (each bucket holds all query
+  * terms' blocks for its doc range, co-located at build time), and one
+  * per-bucket harness serves every entry point: a bucket's rows grouped per
+  * term (term_id order, blocks in doc order) feed either the WAND kernel —
+  * one cursor per term, its own k-heap, at most k local candidates — or one
+  * k-way sorted merge of the decoded doc lists (AND/OR match count and
+  * ordinals). The drivers differ only in how rows reach a bucket and how
+  * candidates merge: [[topK]] exchanges by bucket, then `orderBy(score
+  * desc, doc_ord asc).limit(k)` over `k × nBuckets` rows; [[topKLocal]] and
+  * the match kernels run shuffle-free over the bucket-pinned serving table
+  * and merge on the driver; [[topKBatch]] ranks per query through one
+  * window. Pruning uses per-term global upper bounds for pivot selection
+  * and per-block maxima for skip decisions, both strict (`< threshold`) and
+  * padded by 1 ulp-scale epsilon against float re-association, so ties
+  * survive and the result is rank-identical to the exhaustive BM25 plan —
+  * property-tested in BlockMaxWandSpec.
+  */
 object BlockMaxWand {
 
   /** Safety factor on upper bounds: bounds and scores are computed with
@@ -54,7 +60,8 @@ object BlockMaxWand {
   private val worstFirst: Ordering[Hit] =
     Ordering.by[Hit, (Double, Long)](h => (-h.score, h.doc))
 
-  /** Top-k over the block table.
+  /** Top-k over the block table: the per-bucket kernel after a
+    * `groupByKey(bucket)` exchange, then the global sort-limit merge.
     *
     * @param weights term_id -> idf weight (must be positive)
     * @param params  the BlockParams the blocks were built with
@@ -72,33 +79,28 @@ object BlockMaxWand {
     import spark.implicits._
     require(k > 0, "k must be positive")
     if (weights.isEmpty) return Seq.empty[(Long, Double)].toDF("doc_ord", "score")
-    val ids = weights.keys.toSeq
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
-
-    blocks
-      .filter(col("term_id").isin(ids: _*))
+    blocks.filter(col("term_id").isin(weights.keys.toSeq: _*))
       .groupByKey(_.bucket)
       .flatMapGroups { (_, rows) =>
         val (w, p, adl) = bw.value
-        val cursors = rows.toVector.groupBy(_.term_id).iterator.map {
-          case (tid, bs) => new Cursor(w(tid), bs.sortBy(_.min_doc), p, adl, metrics)
-        }.toArray
-        wand(cursors, k)
+        bucketTopK(termBlocks(rows), w, k, p, adl, metrics)
       }
       .toDF("doc_ord", "score")
       .orderBy(desc("score"), asc("doc_ord"))
       .limit(k)
   }
 
-  /** Serving-mode single-query top-k: the same per-bucket WAND as [[topK]],
-    * run inside `mapPartitions` over a block table that is hash-partitioned
-    * by `bucket` (the serving pin repartitions once at pin time, so every
-    * bucket's rows sit wholly in one cached partition), with the
-    * ≤ k-per-bucket candidates merged on the driver. Per query this is ONE
-    * shuffle-free job over the cached blocks plus a k×buckets-row collect —
-    * versus [[topK]]'s groupByKey exchange + global sort-limit, whose
-    * multi-stage scheduling dominates interactive latency. Rank-identical
-    * to [[topK]]: same wand core, same (score desc, doc_ord asc) ordering.
+  /** Serving-mode single-query top-k: the same per-bucket kernel as
+    * [[topK]], run inside `mapPartitions` over a block table that is
+    * hash-partitioned by `bucket` (the serving pin repartitions once at pin
+    * time, so every bucket's rows sit wholly in one cached partition), with
+    * the ≤ k-per-bucket candidates merged on the driver. Per query this is
+    * ONE shuffle-free job over the cached blocks plus a k×buckets-row
+    * collect — versus [[topK]]'s groupByKey exchange + global sort-limit,
+    * whose multi-stage scheduling dominates interactive latency.
+    * Rank-identical to [[topK]]: same kernel, same (score desc, doc_ord asc)
+    * ordering.
     */
   def topKLocal(
       blocks: Dataset[PostingBlockRow],
@@ -112,32 +114,23 @@ object BlockMaxWand {
     import spark.implicits._
     require(k > 0, "k must be positive")
     if (weights.isEmpty) return Array.empty
-    val ids = weights.keys.toSeq
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
-    val cands = blocks
-      .filter(col("term_id").isin(ids: _*))
+    blocks.filter(col("term_id").isin(weights.keys.toSeq: _*))
       .mapPartitions { it =>
         val (w, p, adl) = bw.value
-        it.toVector.groupBy(_.bucket).iterator.flatMap { case (_, rows) =>
-          val cursors = rows.groupBy(_.term_id).iterator.map {
-            case (tid, bs) => new Cursor(w(tid), bs.sortBy(_.min_doc), p, adl, metrics)
-          }.toArray
-          wand(cursors, k)
-        }
+        buckets(it).flatMap(bucketTopK(_, w, k, p, adl, metrics))
       }
       .collect()
-    cands.sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k)
+      .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1)).take(k)
   }
 
   /** Serving-mode match COUNT over the bucket-pinned block table (the
-    * `_count` / track_total_hits serving surface): per bucket, each term's
-    * blocks decode to doc-ascending lists (blocks are doc-disjoint, so
-    * concatenation in min_doc order is sorted) and a k-way sorted merge
-    * counts the intersection (AND) or union (OR) — one shuffle-free job,
-    * per-bucket partial counts summed on the driver. Count-identical to
-    * `matchQuery(...).count()` (spec-asserted): same postings content, set
-    * semantics independent of evaluation order. */
-  def matchCountLocal(
+    * `_count` / track_total_hits serving surface): per bucket, [[merge]]
+    * counts the intersection (AND) or union (OR) of the terms' doc lists —
+    * one shuffle-free job, per-bucket partial counts summed on the driver.
+    * Count-identical to `matchQuery(...).count()` (spec-asserted): same
+    * postings content, set semantics independent of evaluation order. */
+  private[query] def matchCountLocal(
       blocks: Dataset[PostingBlockRow],
       termIds: Seq[Long],
       requireAll: Boolean
@@ -147,69 +140,20 @@ object BlockMaxWand {
     if (termIds.isEmpty) return 0L
     val ids = termIds.distinct
     val need = ids.size
-    blocks
-      .filter(col("term_id").isin(ids: _*))
-      .mapPartitions { it =>
-        var count = 0L
-        it.toVector.groupBy(_.bucket).iterator.foreach { case (_, rows) =>
-          val lists: Array[Array[Long]] = rows.groupBy(_.term_id).valuesIterator.map { bs =>
-            val sorted = bs.sortBy(_.min_doc)
-            val total = sorted.iterator.map(_.n).sum
-            val out = new Array[Long](total)
-            var o = 0
-            sorted.foreach { b =>
-              val d = PostingBlocks.decodeDocs(b)
-              System.arraycopy(d, 0, out, o, d.length); o += d.length
-            }
-            out
-          }.toArray
-          if (requireAll && lists.length < need) ()
-          else if (lists.length == 1) count += lists(0).length
-          else {
-            // k-way sorted merge: count docs present in all lists (AND) or
-            // in any list (OR)
-            val idx = new Array[Int](lists.length)
-            var live = true
-            while (live) {
-              var minDoc = Long.MaxValue
-              var present = 0
-              var i = 0
-              while (i < lists.length) {
-                if (idx(i) < lists(i).length) {
-                  val d = lists(i)(idx(i))
-                  if (d < minDoc) { minDoc = d; present = 1 }
-                  else if (d == minDoc) present += 1
-                }
-                i += 1
-              }
-              if (minDoc == Long.MaxValue) live = false
-              else {
-                if (!requireAll || present == need) count += 1
-                i = 0
-                while (i < lists.length) {
-                  if (idx(i) < lists(i).length && lists(i)(idx(i)) == minDoc) idx(i) += 1
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        Iterator.single(count)
-      }
-      .collect().sum
+    mergeLocal(blocks, ids)(_.map(countMerged(_, requireAll, need)).sum).sum
   }
 
   /** Serving-mode matched-ORDINAL enumeration over the bucket-pinned block
     * table — the full-materialization sibling of [[matchCountLocal]]: the
-    * same per-bucket k-way sorted merge, emitting the matching doc_ords
-    * instead of counting them. One shuffle-free job; the driver concatenates
+    * same per-bucket [[merge]], emitting the matching doc_ords instead of
+    * counting them. One shuffle-free job; the driver concatenates
     * per-bucket results (buckets partition the ordinal space, so the global
     * set is the disjoint union). CALLER CONTRACT: only invoke when the
     * result size is provably bounded (AND: min term df; OR: Σ term df —
     * both known from the dictionary before any cluster work), so the
     * collect is broadcast-sized by construction. Set-identical to the
     * postings aggregation (same block content, same set semantics). */
-  def matchOrdsLocal(
+  private[query] def matchOrdsLocal(
       blocks: Dataset[PostingBlockRow],
       termIds: Seq[Long],
       requireAll: Boolean
@@ -219,54 +163,7 @@ object BlockMaxWand {
     if (termIds.isEmpty) return Array.empty
     val ids = termIds.distinct
     val need = ids.size
-    blocks
-      .filter(col("term_id").isin(ids: _*))
-      .mapPartitions { it =>
-        val out = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.toVector.groupBy(_.bucket).iterator.foreach { case (_, rows) =>
-          val lists: Array[Array[Long]] = rows.groupBy(_.term_id).valuesIterator.map { bs =>
-            val sorted = bs.sortBy(_.min_doc)
-            val total = sorted.iterator.map(_.n).sum
-            val flat = new Array[Long](total)
-            var o = 0
-            sorted.foreach { b =>
-              val d = PostingBlocks.decodeDocs(b)
-              System.arraycopy(d, 0, flat, o, d.length); o += d.length
-            }
-            flat
-          }.toArray
-          if (requireAll && lists.length < need) ()
-          else if (lists.length == 1) out ++= lists(0)
-          else {
-            val idx = new Array[Int](lists.length)
-            var live = true
-            while (live) {
-              var minDoc = Long.MaxValue
-              var present = 0
-              var i = 0
-              while (i < lists.length) {
-                if (idx(i) < lists(i).length) {
-                  val d = lists(i)(idx(i))
-                  if (d < minDoc) { minDoc = d; present = 1 }
-                  else if (d == minDoc) present += 1
-                }
-                i += 1
-              }
-              if (minDoc == Long.MaxValue) live = false
-              else {
-                if (!requireAll || present == need) out += minDoc
-                i = 0
-                while (i < lists.length) {
-                  if (idx(i) < lists(i).length && lists(i)(idx(i)) == minDoc) idx(i) += 1
-                  i += 1
-                }
-              }
-            }
-          }
-        }
-        Iterator.single(out.result())
-      }
-      .collect().flatten
+    mergeLocal(blocks, ids)(_.flatMap(ordsMerged(_, requireAll, need)).toArray).flatten
   }
 
   /** BATCH top-k over the block table: evaluate a whole QUERY SET with one
@@ -275,12 +172,12 @@ object BlockMaxWand {
     * batch scoring decodes every posting of every query term).
     *
     * One pruned blocks scan for the UNION of all queries' terms, one
-    * doc-bucket group pass; inside each bucket every query runs its own
-    * independent WAND over fresh cursors sharing the bucket's (already
-    * materialized) per-term block lists, so the block-max skip logic — and
-    * its rank-identity-to-exhaustive guarantee — is exactly [[topK]]'s,
-    * amortized across the set. The global merge ranks `≤ k × buckets` rows
-    * per query through one window.
+    * doc-bucket group pass; inside each bucket the bucket's per-term block
+    * lists are grouped ONCE and every query runs [[topK]]'s per-bucket
+    * kernel over fresh cursors on its own terms, so the block-max skip
+    * logic — and its rank-identity-to-exhaustive guarantee — is exactly
+    * [[topK]]'s, amortized across the set. The global merge ranks
+    * `≤ k × buckets` rows per query through one window.
     *
     * @param queries q_id -> (term_id -> idf weight)
     * @return (q_id, rank, doc_ord, score), rank 1-based per query
@@ -299,25 +196,16 @@ object BlockMaxWand {
     val live = queries.filter(_._2.nonEmpty)
     if (live.isEmpty)
       return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
-    val ids = live.values.flatMap(_.keys).toSeq.distinct
     val bq = spark.sparkContext.broadcast((live, params, avgdl))
 
-    val perBucket = blocks
-      .filter(col("term_id").isin(ids: _*))
+    val ids = live.values.flatMap(_.keys).toSeq.distinct
+    val perBucket = blocks.filter(col("term_id").isin(ids: _*))
       .groupByKey(_.bucket)
       .flatMapGroups { (_, rows) =>
         val (qs, p, adl) = bq.value
-        // materialize the bucket's block lists ONCE; every query's cursors
-        // share them (sorted per term), so the per-bucket scan cost is paid
-        // once for the whole query set
-        val byTerm: Map[Long, Vector[PostingBlockRow]] =
-          rows.toVector.groupBy(_.term_id).map { case (t, bs) => t -> bs.sortBy(_.min_doc) }
+        val tb = termBlocks(rows)
         qs.iterator.flatMap { case (qid, weights) =>
-          val cursors = weights.iterator.flatMap { case (tid, w) =>
-            byTerm.get(tid).map(bs => new Cursor(w, bs, p, adl, metrics))
-          }.toArray
-          if (cursors.isEmpty) Iterator.empty
-          else wand(cursors, k).map { case (d, s) => (qid, d, s) }
+          bucketTopK(tb, weights, k, p, adl, metrics).map { case (d, s) => (qid, d, s) }
         }
       }
       .toDF("q_id", "doc_ord", "score")
@@ -327,6 +215,94 @@ object BlockMaxWand {
     perBucket.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("long").as("rank"), col("doc_ord"), col("score"))
+  }
+
+  // ------------------------------------------------ the per-bucket harness
+
+  /** One bucket's blocks, one entry per term in term_id order, each term's
+    * blocks in min_doc order (blocks are doc-disjoint, so that is doc
+    * order). */
+  private type TermBlocks = Array[(Long, Vector[PostingBlockRow])]
+
+  private def termBlocks(rows: Iterator[PostingBlockRow]): TermBlocks =
+    rows.toVector.groupBy(_.term_id).toArray.sortBy(_._1)
+      .map { case (tid, bs) => tid -> bs.sortBy(_.min_doc) }
+
+  /** A partition's rows split per bucket — the shape of the bucket-pinned
+    * serving table, where each bucket sits wholly in one partition. */
+  private def buckets(rows: Iterator[PostingBlockRow]): Iterator[TermBlocks] =
+    rows.toVector.groupBy(_.bucket).valuesIterator.map(bs => termBlocks(bs.iterator))
+
+  /** The per-bucket top-k kernel: one cursor per weighted term, built in
+    * term_id order so every entry point sums a doc's score in the same
+    * order, then [[wand]]. */
+  private def bucketTopK(tb: TermBlocks, weights: Map[Long, Double], k: Int,
+      params: BlockParams, avgdl: Double,
+      metrics: Option[WandMetrics]): Iterator[(Long, Double)] =
+    wand(tb.collect { case (tid, bs) if weights.contains(tid) =>
+      new Cursor(weights(tid), bs, params, avgdl, metrics)
+    }, k)
+
+  /** The shuffle-free match driver: per partition of the bucket-pinned
+    * table, every bucket's terms decoded to doc-ascending ordinal lists
+    * (each term's blocks concatenated), `perPartition` folds them, and the
+    * driver collects one result per partition. */
+  private def mergeLocal[A: Encoder](blocks: Dataset[PostingBlockRow], termIds: Seq[Long])(
+      perPartition: Iterator[Array[Array[Long]]] => A): Array[A] =
+    blocks.filter(col("term_id").isin(termIds: _*))
+      .mapPartitions { it =>
+        Iterator.single(perPartition(buckets(it).map(_.map { case (_, bs) =>
+          Array.concat(bs.map(PostingBlocks.decodeDocs): _*)
+        })))
+      }
+      .collect()
+
+  /** k-way sorted merge over doc-ascending ordinal lists (one per term
+    * present in the bucket): calls `emit` on every doc present in all
+    * `need` terms' lists (AND) or in any list (OR), in doc order. */
+  private def merge(lists: Array[Array[Long]], requireAll: Boolean, need: Int)(
+      emit: Long => Unit): Unit = {
+    if (requireAll && lists.length < need) return
+    val idx = new Array[Int](lists.length)
+    var live = true
+    while (live) {
+      var minDoc = Long.MaxValue
+      var present = 0
+      var i = 0
+      while (i < lists.length) {
+        if (idx(i) < lists(i).length) {
+          val d = lists(i)(idx(i))
+          if (d < minDoc) { minDoc = d; present = 1 }
+          else if (d == minDoc) present += 1
+        }
+        i += 1
+      }
+      if (minDoc == Long.MaxValue) live = false
+      else {
+        if (!requireAll || present == need) emit(minDoc)
+        i = 0
+        while (i < lists.length) {
+          if (idx(i) < lists(i).length && lists(i)(idx(i)) == minDoc) idx(i) += 1
+          i += 1
+        }
+      }
+    }
+  }
+
+  /** Docs matched in one bucket, counted without materializing them. */
+  private[query] def countMerged(lists: Array[Array[Long]], requireAll: Boolean,
+      need: Int): Long = {
+    var n = 0L
+    merge(lists, requireAll, need)(_ => n += 1)
+    n
+  }
+
+  /** Docs matched in one bucket, doc-ascending. */
+  private[query] def ordsMerged(lists: Array[Array[Long]], requireAll: Boolean,
+      need: Int): Array[Long] = {
+    val out = new mutable.ArrayBuilder.ofLong
+    merge(lists, requireAll, need)(out += _)
+    out.result()
   }
 
   /** Lazy-decoding cursor over one term's doc-ascending block list. */
@@ -346,15 +322,10 @@ object BlockMaxWand {
     // blocks must be doc-ascending AND range-disjoint (binary search + skip
     // logic assume it); a violated build (e.g. buildFromDocPartitioned on
     // partitions that were not doc-disjoint) must fail loudly, not mis-rank
-    {
-      var i = 1
-      while (i < blocks.length) {
-        require(blocks(i).min_doc > blocks(i - 1).max_doc,
-          s"overlapping posting blocks for term: [${blocks(i - 1).min_doc},${blocks(i - 1).max_doc}] " +
-            s"then [${blocks(i).min_doc},${blocks(i).max_doc}] — block build contract violated")
-        i += 1
-      }
-    }
+    for (i <- 1 until blocks.length)
+      require(blocks(i).min_doc > blocks(i - 1).max_doc,
+        s"overlapping posting blocks for term: [${blocks(i - 1).min_doc},${blocks(i - 1).max_doc}] " +
+          s"then [${blocks(i).min_doc},${blocks(i).max_doc}] — block build contract violated")
 
     metrics.foreach(_.blocksTotal.add(blocks.length))
 

@@ -422,7 +422,7 @@ final class Federation private (
   /** Federated PhraseQuery: positional matching is per-doc, so slice
     * results union losslessly. `ranked` scores the matched docs with
     * TF-IDF over the phrase terms carrying the MERGED global df (the
-    * stats-override views) — float-exact to monolithic. Ordered by
+    * global-statistics views) — float-exact to monolithic. Ordered by
     * (score desc,)? `tieCols`. */
   def phraseQuery(phrase: String, ranked: Boolean = false, slop: Int = 0,
       inOrder: Boolean = false): DataFrame =
@@ -473,13 +473,14 @@ final class Federation private (
   def boolQuery(q: BoolQuery): DataFrame = gather(ranked = false)(_.boolQuery(q))
 
   /** Federated ranked tree — [[Searcher.boolQueryRanked]] over the union
-    * corpus: each slice compiles the SAME tree with the GLOBAL document
-    * frequencies injected into its positive-leaf BM25 weights (slices
-    * already carry the global N/avgdl), so scores are float-exact to a
-    * monolithic index. Fuzzy leaves are refused in ranked mode — their
-    * dictionary expansion (and the expansion's df weights) would derive
-    * from each slice's local vocabulary; use [[fuzzyQuery]](ranked = true)
-    * for federated fuzzy ranking. */
+    * corpus: each slice compiles the SAME tree on its global-statistics
+    * view ([[slicesWithGlobalStats]]), so its positive-leaf BM25 weights
+    * carry the GLOBAL document frequencies (slices already carry the
+    * global N/avgdl) and scores are float-exact to a monolithic index.
+    * Fuzzy leaves are refused in ranked mode — their dictionary expansion
+    * (and the expansion's df weights) would derive from each slice's local
+    * vocabulary; use [[fuzzyQuery]](ranked = true) for federated fuzzy
+    * ranking. */
   def boolQueryRanked(q: BoolQuery): DataFrame = {
     def hasFuzzy(n: BoolQuery): Boolean = n match {
       case BAnd(cs)  => cs.exists(hasFuzzy)
@@ -499,9 +500,7 @@ final class Federation private (
       case BPhrase(p, _, _) => analyzer.terms(p)
       case other => throw new IllegalArgumentException(s"not a leaf: $other")
     }
-    val dfOverride = resolveGlobal(treeTerms(q).distinct)
-      .flatten.map(rt => rt.term -> rt.df).toMap
-    gather(ranked = true)(_.boolQueryRankedGlobal(q, dfOverride))
+    gather(ranked = true, global = Some(treeTerms(q).distinct))(_.boolQueryRanked(q))
   }
 
   /** Federated query string — [[Searcher.queryString]]: parsed ONCE on the
@@ -512,16 +511,16 @@ final class Federation private (
   }
 
   /** Federated LM-Dirichlet full ranking ([[lmDirichletTopK]] without the
-    * k-cut): global cf through the stats override, global |C| already
-    * injected into every slice — query-likelihood scores float-exact. */
+    * k-cut): global cf through the global-statistics views, global |C|
+    * already injected into every slice — query-likelihood float-exact. */
   def lmDirichletAll(keyword: String, mu: Double = 2000.0): DataFrame =
     gather(ranked = true, global = Some(termsOf(keyword)))(
       _.lmDirichletAll(keyword, mu))
 
   /** Federated LM-Dirichlet: collection statistics merge exactly like
-    * BM25's — global cf via the stats override, global C (Σ tokens) already
-    * injected into every slice — so query-likelihood scores are float-exact
-    * to monolithic. */
+    * BM25's — global cf via the global-statistics views, global C
+    * (Σ tokens) already injected into every slice — so query-likelihood
+    * scores are float-exact to monolithic. */
   def lmDirichletTopK(keyword: String, k: Int, mu: Double = 2000.0): DataFrame =
     gather(ranked = true, Some(k), Some(termsOf(keyword)))(
       _.lmDirichletTopK(keyword, k, mu))
@@ -549,8 +548,8 @@ final class Federation private (
       _.bm25TopKFunctionScore(keyword, factor, k))
 
   /** Federated filter context: the predicate restricts per-document rows
-    * (slice-local is globally correct), scores stay global via the stats
-    * override — standard top-k merge. */
+    * (slice-local is globally correct), scores stay global via the
+    * global-statistics views — standard top-k merge. */
   def bm25TopKFiltered(keyword: String, docFilter: Column, k: Int): DataFrame =
     gather(ranked = true, Some(k), Some(termsOf(keyword)))(
       _.bm25TopKFiltered(keyword, docFilter, k))
@@ -769,8 +768,8 @@ final class Federation private (
     }
 
   /** Per-term BM25 explanation with FEDERATED statistics: idf weighs with
-    * the merged global df (stats override), tf/dl come from the doc's home
-    * slice — the contributions sum to exactly the doc's federated
+    * the merged global df (global-statistics views), tf/dl come from the
+    * doc's home slice — the contributions sum to exactly the doc's federated
     * [[bm25All]] score, the property the monolithic explain carries. */
   def explainScore(keyword: String, key: Seq[Any]): DataFrame =
     locate(key) match {

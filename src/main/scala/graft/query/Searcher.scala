@@ -56,6 +56,15 @@ object Searcher {
   private[query] def disMaxCombine(score: Column, tieBreaker: Double): Column =
     max(score) + lit(tieBreaker) * (sum(score) - max(score))
 
+  /** The static-empty rule (`/root/reference/searcher.go:66-68` for
+    * matches, `:230-232` for phrases): a query with no analyzed terms, with
+    * none of them in the dictionary, or under AND with any unknown term
+    * matches nothing, decided on the driver before any cluster work. A
+    * phrase is AND over its distinct terms. `nTerms` counts the distinct
+    * analyzed terms, `nKnown` the resolved ones. */
+  private[query] def staticallyEmpty(nTerms: Int, nKnown: Int, logic: Logic): Boolean =
+    nTerms == 0 || nKnown == 0 || (logic == And && nKnown != nTerms)
+
   /** Upper bound on phrase slop (enforced by [[BPhrase]], `phraseQuery`,
     * and the query-string parser): positions are 32-bit ordinals, so an
     * unbounded slop would overflow `anchor + slop` and silently match
@@ -101,8 +110,8 @@ object Searcher {
   * partition-prunable postings scan, a single doc-level hash aggregation
   * (intersection/union + scoring in the same pass), and a top-k or
   * doc_ord-ascending sort. No per-term round-trips, no driver-side cursors.
-  */
-/** @param sortUnranked when true (default), matchAll and unranked match/
+  *
+  * @param sortUnranked when true (default), matchAll and unranked match/
   *   phrase results are globally sorted ascending by doc_ord — the
   *   reference's and/orMatch contract (`searcher.go:112-139`). At corpus
   *   scale that is a full shuffle-sort of the matched set (for matchAll,
@@ -121,9 +130,6 @@ final class Searcher(
     // columns (formatVersion 4): per-query WAND reads derive a pruned
     // Dataset from it instead of scanning the whole block store
     preBuiltBlocksByTerm: Option[DataFrame] = None,
-    // per-term (df, cf) substituted into every dictionary resolution — the
-    // federation hook (see withStatsOverride); empty = this index's own stats
-    statsOverride: Map[String, (Long, Long)] = Map.empty,
     // fully pre-resolved dictionary entries for a COVERED term set — the
     // federation fast path (see withPreResolved): terms in the covered set
     // resolve from the map with ZERO dictionary jobs (absence from the map
@@ -311,46 +317,39 @@ final class Searcher(
         return terms.flatMap(byTerm.get)
       case Some((covered, byTerm)) =>
         val restSet = terms.filterNot(covered).distinct
-        val rest = resolveWithStats(restSet).map(rt => rt.term -> rt).toMap
+        val rest = resolveOwn(restSet).map(rt => rt.term -> rt).toMap
         return terms.flatMap(t =>
           if (covered(t)) byTerm.get(t) else rest.get(t))
       case None =>
     }
-    resolveWithStats(terms)
+    resolveOwn(terms)
   }
 
-  private def resolveWithStats(terms: Seq[String]): Seq[ResolvedTerm] = {
-    val base = resolveOwnStats(terms)
-    if (statsOverride.isEmpty) base
-    else base.map(rt => statsOverride.get(rt.term).fold(rt) {
-      case (d, c) => rt.copy(df = d, cf = c)
-    })
-  }
-
-  /** A view of this slice whose term statistics (df, cf) are REPLACED for
-    * the given terms — the federation hook: every scoring surface that
-    * resolves through the dictionary (BM25, dis_max, boosting,
-    * function_score, grouped relevance, LM-Dirichlet) then weighs with
-    * corpus-wide statistics while term ids, postings pruning, and block
-    * tables stay slice-local. Shares this instance's index and prebuilt
-    * block tables; serving-mode pins are per-instance. */
-  private[query] def withStatsOverride(m: Map[String, (Long, Long)]): Searcher =
-    new Searcher(index, analyzer, blockParams, preBuiltBlocks, sortUnranked,
-      dGroupSpan, preBuiltBlocksByTerm, m)
-
-  /** [[withStatsOverride]] plus the full pre-resolved entries for the
-    * covered terms: queries over the returned view compile with ZERO
-    * dictionary jobs for those terms — the resolutions (slice-local ids,
-    * global df/cf already substituted) come from the federation's one
-    * concurrent resolveGlobal pass. */
+  /** A view of this slice whose dictionary answers the `covered` terms from
+    * `byTerm` — the federation hook: the entries carry slice-local term ids
+    * and buckets with corpus-wide statistics (df, cf) substituted by the
+    * federation's one concurrent resolveGlobal pass, so every scoring
+    * surface that resolves through the dictionary (BM25, dis_max, boosting,
+    * function_score, grouped relevance, LM-Dirichlet, ranked boolean trees)
+    * weighs with global statistics while postings pruning and block tables
+    * stay slice-local, and queries over the view compile with ZERO
+    * dictionary jobs for those terms. Shares this instance's index and
+    * prebuilt block tables; serving-mode pins are per-instance. */
   private[query] def withPreResolved(covered: Set[String],
       byTerm: Map[String, ResolvedTerm]): Searcher =
     new Searcher(index, analyzer, blockParams, preBuiltBlocks, sortUnranked,
-      dGroupSpan, preBuiltBlocksByTerm,
-      byTerm.map { case (t, rt) => t -> (rt.df, rt.cf) },
-      Some((covered, byTerm)))
+      dGroupSpan, preBuiltBlocksByTerm, Some((covered, byTerm)))
 
-  private def resolveOwnStats(terms: Seq[String]): Seq[ResolvedTerm] = {
+  /** [[resolve]] restricted to the distinct query terms, or None when
+    * [[Searcher.staticallyEmpty]] decides the query on the driver (no
+    * dictionary lookup at all for a query with no terms). */
+  private def resolveLive(qTerms: Seq[String], logic: Logic): Option[Seq[ResolvedTerm]] = {
+    val terms = qTerms.distinct
+    val rts = if (terms.isEmpty) Nil else resolve(terms)
+    if (Searcher.staticallyEmpty(terms.size, rts.size, logic)) None else Some(rts)
+  }
+
+  private def resolveOwn(terms: Seq[String]): Seq[ResolvedTerm] = {
     fullLocalDict match {
       case Some(d) => return terms.flatMap(d.get)
       case None =>
@@ -380,19 +379,24 @@ final class Searcher(
     * vocabulary was returned), None otherwise. Shared by [[serving]]'s
     * opt-in pin and the lazy auto-dictionary above. */
   private def collectLocalDict(max: Int): Option[Map[String, ResolvedTerm]] = {
-    val hasCf = index.termDict.columns.contains("cf")
+    val rts = dictEntries(index.termDict.limit(max + 1))
+    if (rts.length > max) None else Some(rts.map(rt => rt.term -> rt).toMap)
+  }
+
+  /** The dictionary rows of `dict` collected as entries — the one row
+    * reader behind every resolution. */
+  private def dictEntries(dict: DataFrame): Array[ResolvedTerm] = {
     val hasBucket = index.termBuckets > 0
+    val hasCf = index.termDict.columns.contains("cf") // every index this
+      // library builds carries it; -1 marks a hand-assembled dict without
     val cols = Seq("term", "term_id", "df") ++
       (if (hasCf) Seq("cf") else Nil) ++
       (if (hasBucket) Seq("t_bucket") else Nil)
-    val rows = index.termDict.select(cols.map(col): _*).limit(max + 1).collect()
-    if (rows.length > max) return None
-    Some(rows.map { r =>
+    dict.select(cols.map(col): _*).collect().map { r =>
       val cf = if (hasCf) r.getLong(3) else -1L
       val bucket = if (hasBucket) r.getInt(if (hasCf) 4 else 3) else -1
-      r.getString(0) -> ResolvedTerm(r.getString(0), r.getLong(1),
-        r.getLong(2), bucket, cf)
-    }.toMap)
+      ResolvedTerm(r.getString(0), r.getLong(1), r.getLong(2), bucket, cf)
+    }
   }
 
   /** The Spark dictionary-lookup job behind [[resolve]]: t_bucket-pruned
@@ -401,11 +405,6 @@ final class Searcher(
   private def resolveJob(terms: Seq[String]): Seq[ResolvedTerm] = {
     if (terms.isEmpty) return Nil
     val hasBucket = index.termBuckets > 0
-    val hasCf = index.termDict.columns.contains("cf") // every index this
-      // library builds carries it; -1 marks a hand-assembled dict without
-    val cols = Seq("term", "term_id", "df") ++
-      (if (hasCf) Seq("cf") else Nil) ++
-      (if (hasBucket) Seq("t_bucket") else Nil)
     // t_bucket pre-filter (derived on the driver from the layout's own
     // xxhash64): prunes dictionary row groups at web-scale vocabularies
     val base =
@@ -416,17 +415,8 @@ final class Searcher(
           .distinct.map(_.toInt)
         index.termDict.filter(col("t_bucket").isin(bks: _*))
       } else index.termDict
-    val found = base
-      .filter(col("term").isin(terms.distinct: _*))
-      .select(cols.map(col): _*)
-      .collect()
-      .map { r =>
-        val cf = if (hasCf) r.getLong(3) else -1L
-        val bucket = if (hasBucket) r.getInt(if (hasCf) 4 else 3) else -1
-        r.getString(0) -> ResolvedTerm(r.getString(0), r.getLong(1),
-          r.getLong(2), bucket, cf)
-      }
-      .toMap
+    val found = dictEntries(base.filter(col("term").isin(terms.distinct: _*)))
+      .map(rt => rt.term -> rt).toMap
     terms.flatMap(found.get) // query order preserved (ORDER BY FIELD parity)
   }
 
@@ -504,20 +494,15 @@ final class Searcher(
     * ordinals are unique (post-aggregation) and every one exists in docs
     * (postings reference only indexed docs — the storage invariant). The
     * trailing limit keeps the final k-row sort a TakeOrderedAndProject
-    * (a bare orderBy adds a range-partitioner sampling job). */
-  private def rankedTopK(scored: DataFrame, k: Int): DataFrame = {
-    val topk = scored.select("doc_ord", "score")
-      .orderBy(desc("score"), asc("doc_ord")).limit(k)
-    index.docs.join(broadcast(topk), "doc_ord")
-      .orderBy(desc("score"), asc("doc_ord")).limit(k)
-  }
-
-  /** [[rankedTopK]] with the page-cursor ordering — scores quantized to
-    * [[Searcher.PageGrain]] digits, same cut-then-fetch shape. */
-  private def rankedTopKPaged(scored: DataFrame, k: Int): DataFrame = {
-    def ord = Seq(round(col("score"), Searcher.PageGrain).desc, col("doc_ord").asc)
-    val topk = scored.select("doc_ord", "score").orderBy(ord: _*).limit(k)
-    index.docs.join(broadcast(topk), "doc_ord").orderBy(ord: _*).limit(k)
+    * (a bare orderBy adds a range-partitioner sampling job). The join
+    * carries no broadcast hint: the planner weighs the cut's estimated size
+    * (k × row width) against `spark.sql.autoBroadcastJoinThreshold`, so a
+    * k-row cut is broadcast and an unbounded k is not. `order` is the
+    * ranking: (score desc, doc_ord asc), or the page-cursor ordering. */
+  private def rankedTopK(scored: DataFrame, k: Int,
+      order: Seq[Column] = Seq(desc("score"), asc("doc_ord"))): DataFrame = {
+    val topk = scored.select("doc_ord", "score").orderBy(order: _*).limit(k)
+    index.docs.join(topk, "doc_ord").orderBy(order: _*).limit(k)
   }
 
   private[query] def tfIdfExpr: Column =
@@ -587,51 +572,59 @@ final class Searcher(
     * matched set broadcast-sized, the matched ordinals come from ONE
     * shuffle-free job over the cached block table
     * ([[BlockMaxWand.matchOrdsLocal]] — per-bucket sorted merges, disjoint
-    * union on the driver), and the returned frame is the docs table
-    * (d_bucket-pruned) broadcast-joined to those ordinals — row-identical
+    * union on the driver), and the returned frame is the shared
+    * LocalRelation fetch ([[localDocsFetch]]) of those ordinals — row-identical
     * to the aggregation plan (set semantics over the same postings content;
     * parity spec-asserted), two cached-scan jobs per count instead of the
     * five-job aggregation pipeline. Oversized matches (hot-term ORs — the
     * bound is Σ df) fall back to the distributed plan, which is the correct
     * shape for corpus-sized results. None = not serving / not bounded. */
   private def servingMatchLocal(keyword: String, logic: Logic): Option[DataFrame] =
-    servingByBucket match {
-      case Some(pinned) =>
-        val qTerms = analyzer.terms(keyword).distinct
-        if (qTerms.isEmpty) return Some(emptyDocs(withScore = false))
-        val rts = resolve(qTerms)
-        if (rts.isEmpty) return Some(emptyDocs(withScore = false))
-        if (logic == And && rts.size != qTerms.size)
-          return Some(emptyDocs(withScore = false))
-        val bound =
-          if (logic == And) rts.map(_.df).min else rts.map(_.df).sum
-        if (bound > servingMatchMaxRows) return None
-        val ords = BlockMaxWand.matchOrdsLocal(pinned, rts.map(_.termId), logic == And)
-        Some(localDocsFetch(ords))
-      case None => None
+    servingByBucket.flatMap { pinned =>
+      resolveLive(analyzer.terms(keyword), logic) match {
+        case None => Some(emptyDocs(withScore = false))
+        case Some(rts) =>
+          val bound =
+            if (logic == And) rts.map(_.df).min else rts.map(_.df).sum
+          if (bound > servingMatchMaxRows) None
+          else Some(localDocsFetch(unranked(
+            BlockMaxWand.matchOrdsLocal(pinned, rts.map(_.termId), logic == And)),
+            withScore = false))
+      }
     }
 
-  /** LocalRelation fetch shared by the serving match/phrase fast paths,
-    * exactly like the serving WAND path: one d_bucket-pruned scan collects
-    * the matched rows (driver-bounded by the caller's df bound),
-    * driver-sorted by doc_ord. A lazy join+orderBy would pay a global-sort
-    * sample+shuffle per action — the multi-stage floor these paths exist to
-    * remove — and even a broadcast-join fetch costs an extra AQE stage job;
-    * the isInCollection filter compiles to one InSet scan (one job). The
-    * caller's count()/collect() on the returned frame costs zero jobs. */
-  private def localDocsFetch(ords: Array[Long]): DataFrame = {
-    if (ords.isEmpty) return emptyDocs(withScore = false)
+  /** Unranked hits in the serving fast paths' order: doc_ord ascending. */
+  private def unranked(ords: Iterable[Long]): Seq[(Long, Double)] =
+    ords.toSeq.sorted.map(_ -> 0.0)
+
+  /** LocalRelation fetch shared by the serving WAND, match and phrase fast
+    * paths: one d_bucket-pruned scan collects the hit rows (driver-bounded:
+    * k rows, or the caller's df bound), returned in the order of `hits`,
+    * with `score` appended when `withScore`. A lazy join+orderBy would pay
+    * a global-sort sample+shuffle per action — the multi-stage floor these
+    * paths exist to remove — and even a broadcast-join fetch costs an extra
+    * AQE stage job; the isInCollection filter compiles to one In/InSet scan
+    * (one job). The caller's count()/collect() on the returned frame costs
+    * zero jobs. */
+  private def localDocsFetch(hits: Seq[(Long, Double)], withScore: Boolean): DataFrame = {
+    if (hits.isEmpty) return emptyDocs(withScore)
+    val ords = hits.map(_._1)
     val span = blockParams.bucketSpan
     val docsSide =
       if (index.docs.columns.contains("d_bucket") && span > 0)
-        index.docs.filter(col("d_bucket")
-          .isin(ords.map(_ / span).distinct.toSeq: _*))
+        index.docs.filter(col("d_bucket").isin(ords.map(_ / span).distinct: _*))
       else index.docs
     val cols = "doc_ord" +: docsSide.columns.filterNot(_ == "doc_ord").toSeq
     val fetchDf = docsSide.select(cols.map(col): _*)
-      .filter(col("doc_ord").isInCollection(ords.toSeq))
-    val rows = fetchDf.collect().sortBy(_.getLong(0))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), fetchDf.schema)
+      .filter(col("doc_ord").isInCollection(ords))
+    val byOrd = fetchDf.collect().map(r => r.getLong(0) -> r).toMap
+    val rows = hits.flatMap { case (ord, score) =>
+      byOrd.get(ord).map(r => if (withScore) Row.fromSeq(r.toSeq :+ score) else r)
+    }
+    val schema =
+      if (withScore) fetchDf.schema.add(StructField("score", DoubleType, nullable = false))
+      else fetchDf.schema
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Serving-mode fast path for UNRANKED phrases — the phrase sibling of
@@ -647,9 +640,10 @@ final class Searcher(
       inOrder: Boolean): Option[DataFrame] = {
     if (servingPostings.isEmpty) return None
     val qTerms = analyzer.terms(phrase) // NOT deduped: each ordinal matters
-    if (qTerms.isEmpty) return Some(emptyDocs(withScore = false))
-    val rts = resolve(qTerms.distinct)
-    if (rts.size != qTerms.distinct.size) return Some(emptyDocs(withScore = false))
+    val rts = resolveLive(qTerms, And) match {
+      case None      => return Some(emptyDocs(withScore = false))
+      case Some(rts) => rts
+    }
     if (rts.map(_.df).sum > servingMatchMaxRows) return None
     val slots: Seq[(Long, Int)] = {
       val byTerm = rts.map(rt => rt.term -> rt.termId).toMap
@@ -664,7 +658,7 @@ final class Searcher(
     val ords = byDoc.collect { case (doc, m) if m.size == rts.size &&
         Phrase.hit(slots.map { case (tid, qp) => m(tid).map(_ - qp).toArray }.toArray,
           slop, inOrder) => doc }
-    Some(localDocsFetch(ords.toArray))
+    Some(localDocsFetch(unranked(ords), withScore = false))
   }
 
   /** Total-hits count (the ES `_count` API / `track_total_hits`): how many
@@ -678,12 +672,8 @@ final class Searcher(
         // serving fast path: one shuffle-free job over the bucket-pinned
         // blocks (per-bucket sorted-merge counts, summed on the driver) —
         // count-identical to the aggregation plan (spec-asserted)
-        val qTerms = analyzer.terms(keyword).distinct
-        if (qTerms.isEmpty) return 0L
-        val rts = resolve(qTerms)
-        if (logic == And && rts.size < qTerms.size) return 0L // unknown term
-        if (rts.isEmpty) return 0L
-        BlockMaxWand.matchCountLocal(pinned, rts.map(_.termId), logic == And)
+        resolveLive(analyzer.terms(keyword), logic).fold(0L)(rts =>
+          BlockMaxWand.matchCountLocal(pinned, rts.map(_.termId), logic == And))
       case None =>
         matchedAgg(keyword, logic, ranked = false) match {
           case None          => 0L
@@ -718,18 +708,14 @@ final class Searcher(
     * Shared by facet counting, highlighting and the boolean-tree compiler,
     * which all consume the matched ordinal set, not the doc rows. */
   private[query] def matchedAgg(keyword: String, logic: Logic,
-      ranked: Boolean): Option[DataFrame] = {
-    val qTerms = analyzer.terms(keyword).distinct // IN-lookup set semantics
-    if (qTerms.isEmpty) return None
-    val rts = resolve(qTerms)
-    if (rts.isEmpty) return None
-    if (logic == And && rts.size != qTerms.size) return None
-    val agg = scoredMatches(rts, if (ranked) tfIdfExpr else lit(0.0))
-    Some(logic match {
-      case And => agg.filter(col("nterms") === lit(rts.size))
-      case Or  => agg
-    })
-  }
+      ranked: Boolean): Option[DataFrame] =
+    resolveLive(analyzer.terms(keyword), logic).map { rts =>
+      val agg = scoredMatches(rts, if (ranked) tfIdfExpr else lit(0.0))
+      logic match {
+        case And => agg.filter(col("nterms") === lit(rts.size))
+        case Or  => agg
+      }
+    }
 
   // ------------------------------------ term-dictionary expansion queries
 
@@ -859,13 +845,7 @@ final class Searcher(
       .join(broadcast(slots.toDF("term_id", "q_pos")), "term_id")
       .groupBy(col("doc_ord"), col("q_pos"))
       .agg(array_distinct(flatten(collect_list(col("positions")))).as("positions"))
-    val matched = phraseHits(perSlot, k, slop, inOrder = false)
-
-    if (!ranked) fetchDocs(matched.withColumn("score", lit(0.0)), ranked = false)
-    else fetchDocs(
-      scoredMatches(allRts, tfIdfExpr)
-        .join(matched.select("doc_ord"), "doc_ord", "left_semi"),
-      ranked = true)
+    phraseDocs(phraseHits(perSlot, k, slop, inOrder = false), allRts, ranked)
   }
 
   /** Did-you-mean spell correction: the dictionary terms within `maxEdits`
@@ -1200,24 +1180,21 @@ final class Searcher(
     * (`hit_terms`, space-joined in lexicographic order) — the "which terms
     * matched" half of result highlighting, computed from the INDEX postings
     * (no re-analysis of the corpus). */
-  def highlightTerms(keyword: String, logic: Logic): DataFrame = {
-    val qTerms = analyzer.terms(keyword).distinct
-    val rts = resolve(qTerms)
-    val empty = index.docs.limit(0).withColumn("hit_terms", lit(""))
-    if (qTerms.isEmpty || rts.isEmpty) return empty
-    if (logic == And && rts.size != qTerms.size) return empty
-    val names = rts.map(rt => (rt.termId, rt.term)).toDF("term_id", "term")
-    val agg = postingsFor(rts)
-      .join(broadcast(names), "term_id")
-      .groupBy(col("doc_ord"))
-      .agg(count(lit(1)).as("nterms"),
-        array_join(array_sort(collect_set(col("term"))), " ").as("hit_terms"))
-    val matched = logic match {
-      case And => agg.filter(col("nterms") === lit(rts.size))
-      case Or  => agg
+  def highlightTerms(keyword: String, logic: Logic): DataFrame =
+    resolveLive(analyzer.terms(keyword), logic).fold(
+        index.docs.limit(0).withColumn("hit_terms", lit(""))) { rts =>
+      val names = rts.map(rt => (rt.termId, rt.term)).toDF("term_id", "term")
+      val agg = postingsFor(rts)
+        .join(broadcast(names), "term_id")
+        .groupBy(col("doc_ord"))
+        .agg(count(lit(1)).as("nterms"),
+          array_join(array_sort(collect_set(col("term"))), " ").as("hit_terms"))
+      val matched = logic match {
+        case And => agg.filter(col("nterms") === lit(rts.size))
+        case Or  => agg
+      }
+      index.docs.join(matched.select("doc_ord", "hit_terms"), "doc_ord")
     }
-    index.docs.join(matched.select("doc_ord", "hit_terms"), "doc_ord")
-  }
 
   /** Snippet extraction: for every doc matching any query term, the window
     * of `window` analyzed tokens either side of the FIRST occurrence of the
@@ -1276,17 +1253,18 @@ final class Searcher(
       case None     =>
     }
     phraseMatch(phrase, slop, inOrder, among = None) match {
-      case None => emptyDocs(ranked)
-      case Some((matched, rts)) =>
-        if (!ranked) fetchDocs(matched.withColumn("score", lit(0.0)), ranked = false)
-        else {
-          // score the phrase-matched docs with TF-IDF over the phrase's terms
-          val scored = scoredMatches(rts, tfIdfExpr)
-            .join(matched.select("doc_ord"), "doc_ord", "left_semi")
-          fetchDocs(scored, ranked = true)
-        }
+      case None                 => emptyDocs(ranked)
+      case Some((matched, rts)) => phraseDocs(matched, rts, ranked)
     }
   }
+
+  /** The doc rows of phrase-matched ordinals: doc order, or ranked by
+    * TF-IDF over the phrase's terms `rts`. */
+  private def phraseDocs(matched: DataFrame, rts: Seq[ResolvedTerm],
+      ranked: Boolean): DataFrame =
+    if (!ranked) fetchDocs(matched.withColumn("score", lit(0.0)), ranked = false)
+    else fetchDocs(scoredMatches(rts, tfIdfExpr)
+      .join(matched.select("doc_ord"), "doc_ord", "left_semi"), ranked = true)
 
   /** The phrase-match core shared by [[phraseQuery]] and the rescore window
     * ([[bm25TopKRescore]]): matched ordinals (one column, `doc_ord`) plus
@@ -1300,21 +1278,18 @@ final class Searcher(
       among: Option[DataFrame]): Option[(DataFrame, Seq[ResolvedTerm])] = {
     Phrase.requireSlop(slop)
     val qTerms = analyzer.terms(phrase) // NOT deduped: each ordinal matters
-    if (qTerms.isEmpty) return None
-    val rtsByTerm = resolve(qTerms.distinct).map(rt => rt.term -> rt).toMap
-    if (rtsByTerm.size != qTerms.distinct.size) return None // some term unknown
-    val slots = qTerms.zipWithIndex.map { case (t, i) => (rtsByTerm(t).termId, i) }
-    val slotsDf = slots.toDF("term_id", "q_pos")
-    val k = slots.size
-
-    val base = postingsFor(rtsByTerm.values.toSeq)
-    val restricted = among match {
-      case Some(ords) => base.join(broadcast(ords.select("doc_ord")),
-        Seq("doc_ord"), "left_semi")
-      case None => base
+    resolveLive(qTerms, And).map { rts =>
+      val rtsByTerm = rts.map(rt => rt.term -> rt).toMap
+      val slots = qTerms.zipWithIndex.map { case (t, i) => (rtsByTerm(t).termId, i) }
+      val base = postingsFor(rts)
+      val restricted = among match {
+        case Some(ords) => base.join(broadcast(ords.select("doc_ord")),
+          Seq("doc_ord"), "left_semi")
+        case None => base
+      }
+      val cand = restricted.join(broadcast(slots.toDF("term_id", "q_pos")), "term_id")
+      (phraseHits(cand, slots.size, slop, inOrder), rts)
     }
-    val cand = restricted.join(broadcast(slotsDf), "term_id")
-    Some((phraseHits(cand, k, slop, inOrder), rtsByTerm.values.toSeq))
   }
 
   /** The doc-level tail of every phrase plan: one group per doc of its
@@ -1528,7 +1503,8 @@ final class Searcher(
         scored0.filter(scoreQ < cursorQ ||
           (scoreQ === cursorQ && col("doc_ord") > afterOrd))
     }
-    rankedTopKPaged(scored, k)
+    rankedTopK(scored, k,
+      Seq(round(col("score"), Searcher.PageGrain).desc, col("doc_ord").asc))
   }
 
   /** BM25 top-k in filter context (Elasticsearch `bool.filter`): `docFilter`
@@ -1610,44 +1586,23 @@ final class Searcher(
     * Pass `metrics` to count decoded-vs-total blocks (the pruning win). */
   def bm25TopKWand(keyword: String, k: Int,
       metrics: Option[WandMetrics] = None): DataFrame = {
-    val qTerms = analyzer.terms(keyword).distinct
-    val rts = resolve(qTerms)
+    val rts = resolve(analyzer.terms(keyword).distinct)
     if (rts.isEmpty) return emptyDocs(withScore = true).limit(0)
     val weights = rts.map(rt => rt.termId -> bm25Idf(rt.df)).toMap
     servingByBucket match {
       case Some(pinned) =>
         // serving fast path: one shuffle-free job over the bucket-pinned
-        // blocks collects the k winners, then ONE filter-fetch of exactly
-        // those docs (d_bucket-pruned when the layout carries it) — two
-        // cached-scan jobs per query, no exchange anywhere. The returned
-        // frame is a LocalRelation: the caller's collect costs zero jobs.
-        val local = BlockMaxWand.topKLocal(pinned, weights, k, blockParams,
-          index.avgDocLen, metrics)
-        if (local.isEmpty) return emptyDocs(withScore = true).limit(0)
-        val span = blockParams.bucketSpan
-        val docsSide =
-          if (index.docs.columns.contains("d_bucket") && span > 0)
-            index.docs.filter(col("d_bucket")
-              .isin(local.map(_._1 / span).distinct.toSeq: _*))
-          else index.docs
-        val cols = "doc_ord" +: docsSide.columns.filterNot(_ == "doc_ord").toSeq
-        val fetchDf = docsSide.select(cols.map(col): _*)
-          .filter(col("doc_ord").isin(local.map(_._1).toSeq: _*))
-        val byOrd = fetchDf.collect().map(r => r.getLong(0) -> r).toMap
-        val outRows: java.util.List[Row] = new java.util.ArrayList[Row]()
-        local.foreach { case (ord, score) =>           // already (score desc,
-          byOrd.get(ord).foreach { r =>                //  doc_ord asc)-sorted
-            outRows.add(Row.fromSeq(r.toSeq :+ score))
-          }
-        }
-        spark.createDataFrame(outRows,
-          fetchDf.schema.add(StructField("score", DoubleType, nullable = false)))
+        // blocks collects the k winners (score desc, doc_ord asc), then the
+        // shared LocalRelation fetch of exactly those docs — two
+        // cached-scan jobs per query, no exchange anywhere
+        localDocsFetch(BlockMaxWand.topKLocal(pinned, weights, k, blockParams,
+          index.avgDocLen, metrics).toSeq, withScore = true)
       case None =>
-        val top = BlockMaxWand.topK(blocksFor(rts), weights, k, blockParams,
-          index.avgDocLen, metrics)
-        // top is <= k rows (BlockMaxWand.topK ends in a limit): broadcast
-        // the fetch and keep the k-row resort a TakeOrderedAndProject
-        index.docs.join(broadcast(top), "doc_ord")
+        // top is <= k rows (BlockMaxWand.topK ends in a limit), so the
+        // planner broadcasts it into the fetch; the k-row resort stays a
+        // TakeOrderedAndProject
+        index.docs.join(BlockMaxWand.topK(blocksFor(rts), weights, k, blockParams,
+            index.avgDocLen, metrics), "doc_ord")
           .orderBy(desc("score"), asc("doc_ord")).limit(k)
     }
   }
@@ -1666,14 +1621,7 @@ final class Searcher(
     */
   def bm25TopKBatch(keywords: Seq[String], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val qTerms: Seq[(Int, String)] = keywords.zipWithIndex.flatMap {
-      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
-    }
-    val rts = resolve(qTerms.map(_._2).distinct) // ONE dictionary lookup
-    val byTerm = rts.map(rt => rt.term -> rt).toMap
-    val slots = qTerms.flatMap { case (qi, t) =>
-      byTerm.get(t).map(rt => (qi, rt.termId, bm25Idf(rt.df)))
-    }
+    val (slots, rts) = batchSlots(keywords)
     if (slots.isEmpty)
       return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
     // bounded per-partition top-k selection BEFORE the rank window: the
@@ -1682,7 +1630,7 @@ final class Searcher(
     // caps the window's input at partitions x queries x k rows with
     // bit-identical survivors (graft.TopK scaladoc has the order proof)
     val scored = graft.TopK.prunePerKey(
-      batchScores(slots, byTerm.values.toSeq), "q_id", "score", "doc_ord", k)
+      batchScores(slots, rts), "q_id", "score", "doc_ord", k)
     val w = Window.partitionBy(col("q_id")).orderBy(desc("score"), asc("doc_ord"))
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
@@ -1700,17 +1648,24 @@ final class Searcher(
     */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
       metrics: Option[WandMetrics] = None): DataFrame = {
-    val qTerms: Seq[(Int, String)] = keywords.zipWithIndex.flatMap {
-      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
-    }
-    val rts = resolve(qTerms.map(_._2).distinct) // ONE dictionary lookup
-    val byTerm = rts.map(rt => rt.term -> rt).toMap
-    val queries: Map[Int, Map[Long, Double]] = qTerms
-      .flatMap { case (qi, t) => byTerm.get(t).map(rt => (qi, rt.termId, bm25Idf(rt.df))) }
-      .groupBy(_._1)
+    val (slots, rts) = batchSlots(keywords)
+    val queries: Map[Int, Map[Long, Double]] = slots.groupBy(_._1)
       .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
     BlockMaxWand.topKBatch(blocksFor(rts), queries, k, blockParams,
       index.avgDocLen, metrics)
+  }
+
+  /** A query set's `(q_id, term_id, bm25 idf)` slots — one per distinct
+    * known term of each query, q_id = position in `keywords` — and the
+    * resolved term union, from ONE dictionary lookup. */
+  private def batchSlots(keywords: Seq[String]): (Seq[(Int, Long, Double)], Seq[ResolvedTerm]) = {
+    val qTerms: Seq[(Int, String)] = keywords.zipWithIndex.flatMap {
+      case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
+    }
+    val rts = resolve(qTerms.map(_._2).distinct)
+    val byTerm = rts.map(rt => rt.term -> rt).toMap
+    (qTerms.flatMap { case (qi, t) => byTerm.get(t).map(rt => (qi, rt.termId, bm25Idf(rt.df))) },
+      rts)
   }
 
   /** The batch scoring aggregation shared by [[bm25TopKBatch]] and the
@@ -1740,8 +1695,7 @@ final class Searcher(
   /** All matched docs with BM25 scores (no top-k) — used by oracles where a
     * stable full set beats a float-boundary-sensitive top-k. */
   def bm25All(keyword: String): DataFrame = {
-    val qTerms = analyzer.terms(keyword).distinct
-    val rts = resolve(qTerms)
+    val rts = resolve(analyzer.terms(keyword).distinct)
     if (rts.isEmpty) return emptyDocs(withScore = true).limit(0)
     fetchDocs(scoredMatches(rts, bm25Expr), ranked = true)
   }
@@ -1852,16 +1806,7 @@ final class Searcher(
     * score once — the distinct-term contract). One extra pruned postings
     * aggregation over the positive terms joined to the matched ordinal set. */
   def boolQueryRanked(q: BoolQuery): DataFrame =
-    boolQueryRankedGlobal(q, Map.empty)
-
-  /** [[boolQueryRanked]] with externally supplied per-term document
-    * frequencies for the BM25 weights — the federation hook: a slice scores
-    * with the corpus-wide df (and its injected global N/avgdl) while its
-    * postings pruning stays slice-local. Terms absent from the override
-    * keep this index's own df. */
-  private[query] def boolQueryRankedGlobal(q: BoolQuery,
-      dfOverride: Map[String, Long]): DataFrame =
-    compileBool(q, dfOverride) match {
+    compileBool(q) match {
       case Left(false) => emptyDocs(withScore = true)
       case Left(true) =>
         index.docs.withColumn("score", lit(0.0)).orderBy(asc("doc_ord"))
@@ -1888,9 +1833,7 @@ final class Searcher(
     * (single `doc_ord` column) plus the distinct resolved terms of POSITIVE
     * live leaves, each with its effective query-time boost (for scoring). */
   private def compileBool(
-      q: BoolQuery,
-      dfOverride: Map[String, Long] = Map.empty
-  ): Either[Boolean, (DataFrame, Seq[(ResolvedTerm, Double)])] = {
+      q: BoolQuery): Either[Boolean, (DataFrame, Seq[(ResolvedTerm, Double)])] = {
     // ---- driver-side: analyze leaves, resolve the term union ONCE
     val leafBuf = scala.collection.mutable.ArrayBuffer.empty[(BoolQuery, Boolean)]
     def collectLeaves(n: BoolQuery, pos: Boolean): Unit = n match {
@@ -1906,17 +1849,13 @@ final class Searcher(
       case (_: BFuzzy, _)        => Nil // expanded against the dictionary below
       case (other, _) => throw new IllegalArgumentException(s"not a leaf: $other")
     }
-    val byTerm = resolve(leafTerms.flatten.distinct)
-      .map(rt => rt.term ->
-        dfOverride.get(rt.term).fold(rt)(d => rt.copy(df = d)))
-      .toMap
+    val byTerm = resolve(leafTerms.flatten.distinct).map(rt => rt.term -> rt).toMap
 
     var nextId = 0
     val plans: Seq[(LeafPlan, Boolean)] = leafBuf.toSeq.zip(leafTerms).map {
       case ((BTerm(_, logic, boost), pos), ts) =>
         val known = ts.flatMap(byTerm.get)
-        if (ts.isEmpty || known.isEmpty || (logic == And && known.size != ts.size))
-          (StaticFalse, pos)
+        if (Searcher.staticallyEmpty(ts.size, known.size, logic)) (StaticFalse, pos)
         else {
           val id = nextId; nextId += 1
           (LiveLeaf(id, if (logic == And) "a" else "o",
@@ -1925,7 +1864,8 @@ final class Searcher(
             boost = boost), pos)
         }
       case ((BPhrase(_, boost, slop), pos), ts) =>
-        if (ts.isEmpty || !ts.forall(byTerm.contains)) (StaticFalse, pos)
+        if (Searcher.staticallyEmpty(ts.distinct.size, ts.distinct.count(byTerm.contains), And))
+          (StaticFalse, pos)
         else {
           val id = nextId; nextId += 1
           val slots = ts.zipWithIndex.map { case (t, i) => (byTerm(t).termId, i) }

@@ -132,6 +132,34 @@ class SearcherSpec extends SparkSpec {
     }
   }
 
+  test("bm25TopK cut-then-fetch: broadcast left to the planner, k-row cut only") {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildRight, BuildSide}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val words = Seq("go", "ruby", "php", "java", "rust", "scala")
+    val s = new Searcher(index((0 until 40).map(i =>
+      Seq.tabulate(3 + i % 5)(j => words((i * 7 + j * 3) % words.size)).mkString(" ")),
+      Analyzer.standard()), Analyzer.standard())
+    // build side of the fetch join (docs, with their text, on the left; the
+    // cut on the right) in the pre-execution plan
+    def fetchBuildSides(df: DataFrame): Seq[BuildSide] = {
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }
+      plan.collect { case j: BroadcastHashJoinExec
+        if j.left.output.exists(_.name == "text") => j.buildSide }
+    }
+    def ranking(df: DataFrame): Seq[(Long, Double)] =
+      df.select("doc_id", "score").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val all = s.bm25TopK("go ruby", Int.MaxValue)
+    assert(ranking(all) == ranking(s.bm25All("go ruby")))
+    assert(ranking(all).nonEmpty)
+    assert(!fetchBuildSides(all).contains(BuildRight), "an unbounded cut must not be broadcast")
+    assert(fetchBuildSides(s.bm25TopK("go ruby", 10)) == Seq(BuildRight),
+      "a k-row cut is broadcast into the fetch")
+  }
+
   test("AND with a duplicated query term uses set semantics (documented divergence)") {
     // reference would return empty because len(tokens) != len(terms)
     // (`searcher.go:66-68` after SQL IN dedup); we match on the term SET.
