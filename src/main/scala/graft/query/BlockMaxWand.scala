@@ -3,6 +3,7 @@ package graft.query
 import graft.index.{BlockParams, PostingBlockRow, PostingBlocks}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.inSet
 
 import scala.collection.mutable
 
@@ -77,10 +78,10 @@ object BlockMaxWand {
   ): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k > 0, "k must be positive")
-    if (weights.isEmpty) return Seq.empty[(Long, Double)].toDF("doc_ord", "score")
+    require(k >= 0, s"k must be >= 0, got $k")
+    if (weights.isEmpty || k == 0) return Seq.empty[(Long, Double)].toDF("doc_ord", "score")
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
-    blocks.filter(col("term_id").isin(weights.keys.toSeq: _*))
+    blocks.filter(inSet(col("term_id"), weights.keys))
       .groupByKey(_.bucket)
       .flatMapGroups { (_, rows) =>
         val (w, p, adl) = bw.value
@@ -112,10 +113,10 @@ object BlockMaxWand {
   ): Array[(Long, Double)] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k > 0, "k must be positive")
-    if (weights.isEmpty) return Array.empty
+    require(k >= 0, s"k must be >= 0, got $k")
+    if (weights.isEmpty || k == 0) return Array.empty
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
-    blocks.filter(col("term_id").isin(weights.keys.toSeq: _*))
+    blocks.filter(inSet(col("term_id"), weights.keys))
       .mapPartitions { it =>
         val (w, p, adl) = bw.value
         buckets(it).flatMap(bucketTopK(_, w, k, p, adl, metrics))
@@ -192,14 +193,13 @@ object BlockMaxWand {
   ): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k > 0, "k must be positive")
+    require(k >= 0, s"k must be >= 0, got $k")
     val live = queries.filter(_._2.nonEmpty)
-    if (live.isEmpty)
+    if (live.isEmpty || k == 0)
       return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
     val bq = spark.sparkContext.broadcast((live, params, avgdl))
 
-    val ids = live.values.flatMap(_.keys).toSeq.distinct
-    val perBucket = blocks.filter(col("term_id").isin(ids: _*))
+    val perBucket = blocks.filter(inSet(col("term_id"), live.values.flatMap(_.keys)))
       .groupByKey(_.bucket)
       .flatMapGroups { (_, rows) =>
         val (qs, p, adl) = bq.value
@@ -249,7 +249,7 @@ object BlockMaxWand {
     * driver collects one result per partition. */
   private def mergeLocal[A: Encoder](blocks: Dataset[PostingBlockRow], termIds: Seq[Long])(
       perPartition: Iterator[Array[Array[Long]]] => A): Array[A] =
-    blocks.filter(col("term_id").isin(termIds: _*))
+    blocks.filter(inSet(col("term_id"), termIds))
       .mapPartitions { it =>
         Iterator.single(perPartition(buckets(it).map(_.map { case (_, bs) =>
           Array.concat(bs.map(PostingBlocks.decodeDocs): _*)

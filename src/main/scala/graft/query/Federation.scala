@@ -202,7 +202,9 @@ final class Federation private (
     * with ordinals out of key order can keep a different member of an
     * exact-score tie straddling the boundary. */
   def bm25TopKWand(keyword: String, k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame =
+      metrics: Option[WandMetrics] = None): DataFrame = {
+    require(k >= 0, s"k must be >= 0, got $k")
+    if (k == 0) return emptyDocs(withScore = true)
     unionOrdered(resolvedSlices(resolveGlobal(termsOf(keyword))) { (s, rts) =>
       val weights = rts.map(rt => rt.termId -> s.bm25Idf(rt.df)).toMap
       cut(s.index.docs
@@ -210,6 +212,7 @@ final class Federation private (
           s.index.avgDocLen, metrics), "doc_ord")
         .drop("doc_ord"), k)
     }, ranked = true, Some(k))
+  }
 
   private def byQuery = Window.partitionBy(col("q_id")).orderBy(scoreOrder: _*)
 
@@ -220,7 +223,8 @@ final class Federation private (
     * projected to `(q_id, rank, tieCols…, score)`. */
   private def batchTopK(keywords: Seq[String], k: Int)(
       f: (Searcher, Seq[(Int, Long, Double)], Seq[ResolvedTerm]) => DataFrame): DataFrame = {
-    val qTerms = keywords.zipWithIndex.flatMap {
+    // k = 0 ranks nothing: no slice is resolved or planned
+    val qTerms = if (k == 0) Nil else keywords.zipWithIndex.flatMap {
       case (kw, qi) => analyzer.terms(kw).distinct.map(t => (qi, t))
     }
     val parts = resolvedSlices(resolveGlobal(qTerms.map(_._2).distinct)) { (s, rts) =>
@@ -265,7 +269,8 @@ final class Federation private (
     * by WAND's heaps, one gather window. Rank-identical to
     * [[bm25TopKBatch]] (pinned in FederationSpec). */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
-      metrics: Option[WandMetrics] = None): DataFrame =
+      metrics: Option[WandMetrics] = None): DataFrame = {
+    require(k >= 0, s"k must be >= 0, got $k")
     batchTopK(keywords, k) { (s, slots, rts) =>
       val queries: Map[Int, Map[Long, Double]] = slots.groupBy(_._1)
         .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
@@ -274,6 +279,7 @@ final class Federation private (
           s.index.avgDocLen, metrics).drop("rank"), "doc_ord")
         .drop("doc_ord")
     }
+  }
 
   // --------------------------- global-vocabulary dictionary expansion
 

@@ -4,6 +4,7 @@ import graft.analysis.Analyzer
 import graft.index.{BlockParams, PostingBlockRow, PostingBlocks, TextIndex}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge.inSet
 import org.apache.spark.sql.types.{DoubleType, StructField}
 
 sealed trait Logic
@@ -176,8 +177,8 @@ final class Searcher(
     preBuiltBlocksByTerm match {
       case _ if servingByBucket.isDefined => servingByBucket.get
       case Some(raw) if !blocksPinned && rts.nonEmpty && rts.forall(_.bucket >= 0) =>
-        raw.filter(col("t_bucket").isin(rts.map(_.bucket).distinct: _*) &&
-            col("term_id").isin(rts.map(_.termId): _*))
+        bucketPruned(raw, "t_bucket", rts.map(_.bucket))
+          .filter(inSet(col("term_id"), rts.map(_.termId)))
           .select(col("term_id"), col("bucket").cast("long"), col("min_doc"),
             col("max_doc"), col("n"), col("max_tf"), col("min_dl"),
             col("docs"), col("tfs"), col("dls"))
@@ -236,10 +237,13 @@ final class Searcher(
       // pin the blocks PRE-CLUSTERED by doc bucket: one shuffle at pin
       // time buys every subsequent per-query WAND a shuffle-free plan
       // (BlockMaxWand.topKLocal runs each bucket's heap inside its own
-      // cached partition and collects only k rows per bucket)
-      // term_id-sorted within each bucket partition: the cache's per-batch
-      // min/max stats then PRUNE the per-query term filter to the touched
-      // batches instead of decoding the whole pinned table per query
+      // cached partition and collects only k rows per bucket), sorted by
+      // term_id within each bucket. The per-query term filter is a
+      // reference-held InSet (the same generated code for every query),
+      // which the cache's per-batch min/max stats do not read: each query
+      // scans every cached batch of the pin, in exchange for compiling no
+      // new classes (a literal In list would prune batches but compile
+      // fresh code per term set)
       val byBucket = blocks.repartition(col("bucket"))
         .sortWithinPartitions(col("bucket"), col("term_id"), col("min_doc"))
       byBucket.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -255,10 +259,11 @@ final class Searcher(
       // the match/phrase/boolean surfaces read postings per query; a
       // serving shard that fits its postings slice in storage memory
       // removes that parquet re-read the same way the block pin does —
-      // re-clustered by (t_bucket, term_id) at pin time so the cache's
-      // per-batch stats prune each query's term probe to the touched
-      // batches (the parquet layout is doc-range-major for delta locality;
-      // serving reads are term-major, so the pin re-sorts once).
+      // re-clustered by (t_bucket, term_id) at pin time (the parquet
+      // layout is doc-range-major for delta locality; serving reads are
+      // term-major, so the pin re-sorts once). As on the block pin, the
+      // term probe is an InSet that scans every cached batch and compiles
+      // nothing per query.
       // Off by default: at 10^12 docs postings dwarf the block summaries —
       // pin only when the shard's slice fits (the caller knows its shard).
       val byTerm =
@@ -410,12 +415,10 @@ final class Searcher(
     val base =
       if (hasBucket) {
         val n = index.termBuckets
-        val bks = terms.distinct
-          .map(t => ((graft.index.IndexBuilder.termHash(t) % n) + n) % n)
-          .distinct.map(_.toInt)
-        index.termDict.filter(col("t_bucket").isin(bks: _*))
+        bucketPruned(index.termDict, "t_bucket",
+          terms.map(t => (((graft.index.IndexBuilder.termHash(t) % n) + n) % n).toInt))
       } else index.termDict
-    val found = dictEntries(base.filter(col("term").isin(terms.distinct: _*)))
+    val found = dictEntries(base.filter(inSet(col("term"), terms)))
       .map(rt => rt.term -> rt).toMap
     terms.flatMap(found.get) // query order preserved (ORDER BY FIELD parity)
   }
@@ -427,11 +430,22 @@ final class Searcher(
     * `/root/reference/storage_rdb_Impl.go:151-172`). */
   private def postingsFor(rts: Seq[ResolvedTerm]): DataFrame = {
     val src = servingPostings.getOrElse(index.postings)
-    val byId = src.filter(col("term_id").isin(rts.map(_.termId): _*))
-    if (index.termBuckets > 0)
-      byId.filter(col("t_bucket").isin(rts.map(_.bucket).distinct: _*))
-    else byId
+    val byBucket =
+      if (index.termBuckets > 0) bucketPruned(src, "t_bucket", rts.map(_.bucket)) else src
+    byBucket.filter(inSet(col("term_id"), rts.map(_.termId)))
   }
+
+  /** `df` restricted to the `buckets` of its int bucket column `c` — on
+    * a parquet partition column, directory pruning that compiles nothing.
+    * A pinned (cached) `df` is returned whole: there the filter could only
+    * skip cached batches, and its literal list — an int `InSet` is a
+    * `switch` with the values inlined — would compile new classes per
+    * query, while the caller's exact [[inSet]] filter already restricts the
+    * rows. On a data column (the dictionary's t_bucket) the list does reach
+    * generated code; sorted, it compiles once per distinct bucket set. */
+  private def bucketPruned(df: DataFrame, c: String, buckets: Seq[Int]): DataFrame =
+    if (df.storageLevel.useMemory || df.storageLevel.useDisk) df
+    else df.filter(col(c).isin(buckets.distinct.sorted: _*))
 
   private def emptyDocs(withScore: Boolean): DataFrame = {
     val base = index.docs.limit(0)
@@ -603,20 +617,20 @@ final class Searcher(
     * with `score` appended when `withScore`. A lazy join+orderBy would pay
     * a global-sort sample+shuffle per action — the multi-stage floor these
     * paths exist to remove — and even a broadcast-join fetch costs an extra
-    * AQE stage job; the isInCollection filter compiles to one In/InSet scan
-    * (one job). The caller's count()/collect() on the returned frame costs
-    * zero jobs. */
+    * AQE stage job; the doc_ord [[inSet]] filter is one scan (one job)
+    * whose code is the same for every hit set. The caller's
+    * count()/collect() on the returned frame costs zero jobs. */
   private def localDocsFetch(hits: Seq[(Long, Double)], withScore: Boolean): DataFrame = {
     if (hits.isEmpty) return emptyDocs(withScore)
     val ords = hits.map(_._1)
     val span = blockParams.bucketSpan
     val docsSide =
       if (index.docs.columns.contains("d_bucket") && span > 0)
-        index.docs.filter(col("d_bucket").isin(ords.map(_ / span).distinct: _*))
+        bucketPruned(index.docs, "d_bucket", ords.map(o => (o / span).toInt))
       else index.docs
     val cols = "doc_ord" +: docsSide.columns.filterNot(_ == "doc_ord").toSeq
     val fetchDf = docsSide.select(cols.map(col): _*)
-      .filter(col("doc_ord").isInCollection(ords))
+      .filter(inSet(col("doc_ord"), ords))
     val byOrd = fetchDf.collect().map(r => r.getLong(0) -> r).toMap
     val rows = hits.flatMap { case (ord, score) =>
       byOrd.get(ord).map(r => if (withScore) Row.fromSeq(r.toSeq :+ score) else r)
@@ -905,7 +919,7 @@ final class Searcher(
     val hasBucket = index.termBuckets > 0
     val cols = if (hasBucket) Seq("term", "term_id", "df", "t_bucket")
                else Seq("term", "term_id", "df")
-    val dict = index.termDict.filter(col("term_id").isin(tfById.keys.toSeq: _*))
+    val dict = index.termDict.filter(inSet(col("term_id"), tfById.keys))
       .select(cols.map(col): _*).collect()
       .map(r => ResolvedTerm(r.getString(0), r.getLong(1), r.getLong(2),
         if (hasBucket) r.getInt(3) else -1))
@@ -948,7 +962,7 @@ final class Searcher(
     if (rts.isEmpty) return empty
     val src0 = index.postings
       .filter(col("doc_ord") === lit(docOrd))
-      .filter(col("term_id").isin(rts.map(_.termId): _*))
+      .filter(inSet(col("term_id"), rts.map(_.termId)))
     val src = if (dGroupSpan > 0 && index.postings.columns.contains("d_group"))
       src0.filter(col("d_group") === lit(docOrd / dGroupSpan)) else src0
     val withDl = withTokenCount(src)
@@ -1586,7 +1600,8 @@ final class Searcher(
     * Pass `metrics` to count decoded-vs-total blocks (the pruning win). */
   def bm25TopKWand(keyword: String, k: Int,
       metrics: Option[WandMetrics] = None): DataFrame = {
-    val rts = resolve(analyzer.terms(keyword).distinct)
+    require(k >= 0, s"k must be >= 0, got $k")
+    val rts = if (k == 0) Nil else resolve(analyzer.terms(keyword).distinct)
     if (rts.isEmpty) return emptyDocs(withScore = true).limit(0)
     val weights = rts.map(rt => rt.termId -> bm25Idf(rt.df)).toMap
     servingByBucket match {
@@ -1648,7 +1663,8 @@ final class Searcher(
     */
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
       metrics: Option[WandMetrics] = None): DataFrame = {
-    val (slots, rts) = batchSlots(keywords)
+    require(k >= 0, s"k must be >= 0, got $k")
+    val (slots, rts) = if (k == 0) (Nil, Nil) else batchSlots(keywords)
     val queries: Map[Int, Map[Long, Double]] = slots.groupBy(_._1)
       .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
     BlockMaxWand.topKBatch(blocksFor(rts), queries, k, blockParams,
