@@ -5,6 +5,7 @@ import graft.fixtures.SyntheticTranscripts
 import graft.index.BlockParams
 import graft.query.{And, Or, Searcher}
 import graft.storage.{ParquetIndexStorage, StorageParams}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
@@ -12,6 +13,11 @@ import org.apache.spark.sql.SparkSession
   * Spark job count in serving mode at the WAND-demo corpus, so the mix's
   * cost is attributed to a surface instead of guessed at. Not part of the
   * benchmark surface.
+  *
+  * Two views per surface: `best` repeats one query (Spark's codegen cache
+  * hits, so it isolates scan and job cost) and `fresh` runs a query of the
+  * same shape over new terms each time (median latency and Janino
+  * compilations per query: what a stream of distinct user queries pays).
   */
 object ServingProbe {
   def main(args: Array[String]): Unit = {
@@ -77,6 +83,30 @@ object ServingProbe {
       }
       Thread.sleep(300)
       println(f"PROBE $name%-24s best=$best%.3f s  jobs/5reps=${jobs.get()}")
+    }
+    // same shapes over new terms each query (a serving stream's view)
+    val fresh: Seq[(String, Int => Unit)] = Seq(
+      "wand_2term" -> (i => { s.bm25TopKWand(f"hot${i % 3} t${5000 + 37 * i}%06d", 10).collect(); () }),
+      "wand_3term" -> (i => { s.bm25TopKWand(f"hot2 t${7000 + 41 * i}%06d t${1000 + 29 * i}%06d", 10).collect(); () }),
+      "match_and" -> (i => { s.matchQuery(f"hot1 t${9000 + 31 * i}%06d", And).count(); () }),
+      "match_or" -> (i => { s.matchQuery(f"hot2 t${1800 + 43 * i}%06d", Or).count(); () }),
+      "count_and" -> (i => { s.countMatches(f"hot1 t${3000 + 47 * i}%06d", And); () }),
+      "count_or" -> (i => { s.countMatches(f"hot0 t${4000 + 53 * i}%06d", Or); () }),
+      "phrase_freq" -> (i => { s.phraseQuery(f"t${2 * i}%06d t${2 * i + 1}%06d").count(); () })
+    )
+    val nFresh = 9
+    for ((name, q) <- fresh) {
+      q(1000) // warm the shape once
+      Thread.sleep(200); jobs.set(0)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ts = (0 until nFresh).map { i =>
+        val t0 = System.nanoTime(); q(i)
+        (System.nanoTime() - t0) / 1e9
+      }.sorted
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      Thread.sleep(300)
+      println(f"PROBE fresh_$name%-18s p50=${ts(nFresh / 2)}%.3f s  " +
+        f"compiles/q=${compiles.toDouble / nFresh}%.1f  jobs/q=${jobs.get().toDouble / nFresh}%.1f")
     }
     // the bench's mix, for direct comparison (wand ×3, counts ×2, phrase)
     val mix = Seq(surfaces(0)._2, surfaces(4)._2, surfaces(1)._2,

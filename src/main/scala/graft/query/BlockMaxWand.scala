@@ -78,8 +78,8 @@ object BlockMaxWand {
   ): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k >= 0, s"k must be >= 0, got $k")
-    if (weights.isEmpty || k == 0) return Seq.empty[(Long, Double)].toDF("doc_ord", "score")
+    require(k > 0, "k must be positive")
+    if (weights.isEmpty) return Seq.empty[(Long, Double)].toDF("doc_ord", "score")
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
     blocks.filter(inSet(col("term_id"), weights.keys))
       .groupByKey(_.bucket)
@@ -113,8 +113,8 @@ object BlockMaxWand {
   ): Array[(Long, Double)] = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k >= 0, s"k must be >= 0, got $k")
-    if (weights.isEmpty || k == 0) return Array.empty
+    require(k > 0, "k must be positive")
+    if (weights.isEmpty) return Array.empty
     val bw = spark.sparkContext.broadcast((weights, params, avgdl))
     blocks.filter(inSet(col("term_id"), weights.keys))
       .mapPartitions { it =>
@@ -193,9 +193,9 @@ object BlockMaxWand {
   ): DataFrame = {
     val spark = blocks.sparkSession
     import spark.implicits._
-    require(k >= 0, s"k must be >= 0, got $k")
+    require(k > 0, "k must be positive")
     val live = queries.filter(_._2.nonEmpty)
-    if (live.isEmpty || k == 0)
+    if (live.isEmpty)
       return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
     val bq = spark.sparkContext.broadcast((live, params, avgdl))
 

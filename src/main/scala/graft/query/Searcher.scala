@@ -5,7 +5,9 @@ import graft.index.{BlockParams, PostingBlockRow, PostingBlocks, TextIndex}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge.inSet
+import org.apache.spark.sql.graftbridge.PinnedTable
 import org.apache.spark.sql.types.{DoubleType, StructField}
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 sealed trait Logic
 case object And extends Logic // `/root/reference/query.go:13-18` Logic=AND
@@ -153,17 +155,17 @@ final class Searcher(
   lazy val blocks: Dataset[PostingBlockRow] =
     preBuiltBlocks.getOrElse(PostingBlocks.build(index, blockParams).cache())
 
-  @volatile private var blocksPinned = false
   /** Serving-mode block table, hash-repartitioned by doc bucket ONCE at pin
     * time so every bucket's rows sit wholly in one cached partition — the
     * precondition for the shuffle-free per-query [[BlockMaxWand.topKLocal]]
     * path (one job, no exchange, k×buckets-row collect). */
-  @volatile private var servingByBucket: Option[Dataset[PostingBlockRow]] = None
+  @volatile private var servingByBucket: Option[PinnedTable] = None
   /** Serving-mode postings view, re-clustered (t_bucket, term_id) and
     * pinned — the term-major layout the per-query match/phrase probes
     * want, versus the doc-range-major parquet layout deltas want. */
-  @volatile private var servingPostings: Option[DataFrame] = None
-  @volatile private var postingsPinned = false
+  @volatile private var servingPostings: Option[PinnedTable] = None
+  /** Serving-mode docs table, read by [[localDocsFetch]]. */
+  @volatile private var servingDocs: Option[PinnedTable] = None
 
   /** The block table a single WAND query should scan: when the persisted
     * layout carries the (t_bucket, d_group) partition level and the blocks
@@ -171,13 +173,16 @@ final class Searcher(
     * terms' buckets — a cold per-query read is then proportional to the
     * terms' block leaves, not the store (the unpruned read listed and
     * footer-scanned every leaf: measured 23.6 s vs 5.5 s exhaustive for 8
-    * cold queries at 10^6 turns). Pinned or in-memory blocks scan the
-    * cached table — the term_id filter inside BlockMaxWand prunes there. */
+    * cold queries at 10^6 turns). Pinned blocks are read through
+    * [[PinnedTable.rowsIn]], which skips the cached batches that hold none
+    * of the terms; in-memory blocks scan the cached table, restricted by
+    * the term_id filter inside BlockMaxWand. */
   private[query] def blocksFor(rts: Seq[ResolvedTerm]): Dataset[PostingBlockRow] =
     preBuiltBlocksByTerm match {
-      case _ if servingByBucket.isDefined => servingByBucket.get
-      case Some(raw) if !blocksPinned && rts.nonEmpty && rts.forall(_.bucket >= 0) =>
-        bucketPruned(raw, "t_bucket", rts.map(_.bucket))
+      case _ if servingByBucket.isDefined =>
+        servingByBucket.get.rowsIn("term_id", rts.map(_.termId)).as[PostingBlockRow]
+      case Some(raw) if rts.nonEmpty && rts.forall(_.bucket >= 0) =>
+        raw.filter(col("t_bucket").isin(rts.map(_.bucket).distinct.sorted: _*))
           .filter(inSet(col("term_id"), rts.map(_.termId)))
           .select(col("term_id"), col("bucket").cast("long"), col("min_doc"),
             col("max_doc"), col("n"), col("max_tf"), col("min_dl"),
@@ -238,32 +243,26 @@ final class Searcher(
       // time buys every subsequent per-query WAND a shuffle-free plan
       // (BlockMaxWand.topKLocal runs each bucket's heap inside its own
       // cached partition and collects only k rows per bucket), sorted by
-      // term_id within each bucket. The per-query term filter is a
-      // reference-held InSet (the same generated code for every query),
-      // which the cache's per-batch min/max stats do not read: each query
-      // scans every cached batch of the pin, in exchange for compiling no
-      // new classes (a literal In list would prune batches but compile
-      // fresh code per term set)
-      val byBucket = blocks.repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("term_id"), col("min_doc"))
-      byBucket.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      byBucket.count() // materialize now: first query should not pay the scan
-      servingByBucket = Some(byBucket)
-      blocksPinned = true
+      // term_id within each bucket so that PinnedTable.rowsIn skips, per
+      // query, the cached batches holding none of the query's terms (by
+      // their min/max stats, against the term set as data: no new code
+      // per query). Materialized now: the first query should not pay the
+      // scan.
+      servingByBucket = Some(PinnedTable(blocks.repartition(col("bucket"))
+        .sortWithinPartitions(col("bucket"), col("term_id"), col("min_doc")).toDF(),
+        MEMORY_AND_DISK))
     }
-    if (pinDocs) {
-      index.docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      index.docs.count()
-    }
+    if (pinDocs && servingDocs.isEmpty)
+      servingDocs = Some(PinnedTable(index.docs, MEMORY_AND_DISK))
     if (pinPostings && servingPostings.isEmpty) {
       // the match/phrase/boolean surfaces read postings per query; a
       // serving shard that fits its postings slice in storage memory
       // removes that parquet re-read the same way the block pin does —
-      // re-clustered by (t_bucket, term_id) at pin time (the parquet
-      // layout is doc-range-major for delta locality; serving reads are
-      // term-major, so the pin re-sorts once). As on the block pin, the
-      // term probe is an InSet that scans every cached batch and compiles
-      // nothing per query.
+      // re-clustered by (t_bucket, term_id) at pin time so that, as on
+      // the block pin, each query's term probe reads only the cached
+      // batches that hold its terms (the parquet layout is doc-range-major
+      // for delta locality; serving reads are term-major, so the pin
+      // re-sorts once).
       // Off by default: at 10^12 docs postings dwarf the block summaries —
       // pin only when the shard's slice fits (the caller knows its shard).
       val byTerm =
@@ -271,10 +270,7 @@ final class Searcher(
           index.postings.repartition(col("t_bucket"))
             .sortWithinPartitions(col("t_bucket"), col("term_id"), col("doc_ord"))
         else index.postings
-      byTerm.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      byTerm.count()
-      servingPostings = Some(byTerm)
-      postingsPinned = true
+      servingPostings = Some(PinnedTable(byTerm, MEMORY_AND_DISK))
     }
     if (fullLocalDict.isEmpty && resolveLru.isEmpty) {
       // ONE bounded collect decides the shape AND loads the dictionary
@@ -296,14 +292,13 @@ final class Searcher(
 
   /** Release serving-mode pins (blocks/docs/postings + driver dictionary). */
   def unpin(): Unit = {
-    blocksPinned = false
-    servingByBucket.foreach(_.unpersist())
+    servingByBucket.foreach(_.df.unpersist())
     servingByBucket = None
     blocks.unpersist()
+    servingDocs = None
     index.docs.unpersist()
-    servingPostings.foreach(_.unpersist())
+    servingPostings.foreach(_.df.unpersist())
     servingPostings = None
-    postingsPinned = false
     fullLocalDict = None
     resolveLru = None
   }
@@ -415,8 +410,8 @@ final class Searcher(
     val base =
       if (hasBucket) {
         val n = index.termBuckets
-        bucketPruned(index.termDict, "t_bucket",
-          terms.map(t => (((graft.index.IndexBuilder.termHash(t) % n) + n) % n).toInt))
+        val bks = terms.map(t => (((graft.index.IndexBuilder.termHash(t) % n) + n) % n).toInt)
+        index.termDict.filter(col("t_bucket").isin(bks.distinct.sorted: _*))
       } else index.termDict
     val found = dictEntries(base.filter(inSet(col("term"), terms)))
       .map(rt => rt.term -> rt).toMap
@@ -428,24 +423,17 @@ final class Searcher(
     * touched term-bucket directories are read at all
     * (the Spark analogue of `GetInvertedIndexByTokenIDs`,
     * `/root/reference/storage_rdb_Impl.go:151-172`). */
-  private def postingsFor(rts: Seq[ResolvedTerm]): DataFrame = {
-    val src = servingPostings.getOrElse(index.postings)
-    val byBucket =
-      if (index.termBuckets > 0) bucketPruned(src, "t_bucket", rts.map(_.bucket)) else src
-    byBucket.filter(inSet(col("term_id"), rts.map(_.termId)))
+  private def postingsFor(rts: Seq[ResolvedTerm]): DataFrame = servingPostings match {
+    case Some(pinned) => pinned.rowsIn("term_id", rts.map(_.termId))
+    case None =>
+      // t_bucket is a parquet partition column: directory pruning that
+      // compiles nothing
+      val byBucket =
+        if (index.termBuckets > 0)
+          index.postings.filter(col("t_bucket").isin(rts.map(_.bucket).distinct.sorted: _*))
+        else index.postings
+      byBucket.filter(inSet(col("term_id"), rts.map(_.termId)))
   }
-
-  /** `df` restricted to the `buckets` of its int bucket column `c` — on
-    * a parquet partition column, directory pruning that compiles nothing.
-    * A pinned (cached) `df` is returned whole: there the filter could only
-    * skip cached batches, and its literal list — an int `InSet` is a
-    * `switch` with the values inlined — would compile new classes per
-    * query, while the caller's exact [[inSet]] filter already restricts the
-    * rows. On a data column (the dictionary's t_bucket) the list does reach
-    * generated code; sorted, it compiles once per distinct bucket set. */
-  private def bucketPruned(df: DataFrame, c: String, buckets: Seq[Int]): DataFrame =
-    if (df.storageLevel.useMemory || df.storageLevel.useDisk) df
-    else df.filter(col(c).isin(buckets.distinct.sorted: _*))
 
   private def emptyDocs(withScore: Boolean): DataFrame = {
     val base = index.docs.limit(0)
@@ -594,7 +582,7 @@ final class Searcher(
     * bound is Σ df) fall back to the distributed plan, which is the correct
     * shape for corpus-sized results. None = not serving / not bounded. */
   private def servingMatchLocal(keyword: String, logic: Logic): Option[DataFrame] =
-    servingByBucket.flatMap { pinned =>
+    servingByBucket.flatMap { _ =>
       resolveLive(analyzer.terms(keyword), logic) match {
         case None => Some(emptyDocs(withScore = false))
         case Some(rts) =>
@@ -602,7 +590,7 @@ final class Searcher(
             if (logic == And) rts.map(_.df).min else rts.map(_.df).sum
           if (bound > servingMatchMaxRows) None
           else Some(localDocsFetch(unranked(
-            BlockMaxWand.matchOrdsLocal(pinned, rts.map(_.termId), logic == And)),
+            BlockMaxWand.matchOrdsLocal(blocksFor(rts), rts.map(_.termId), logic == And)),
             withScore = false))
       }
     }
@@ -612,25 +600,31 @@ final class Searcher(
     ords.toSeq.sorted.map(_ -> 0.0)
 
   /** LocalRelation fetch shared by the serving WAND, match and phrase fast
-    * paths: one d_bucket-pruned scan collects the hit rows (driver-bounded:
-    * k rows, or the caller's df bound), returned in the order of `hits`,
-    * with `score` appended when `withScore`. A lazy join+orderBy would pay
-    * a global-sort sample+shuffle per action — the multi-stage floor these
-    * paths exist to remove — and even a broadcast-join fetch costs an extra
-    * AQE stage job; the doc_ord [[inSet]] filter is one scan (one job)
-    * whose code is the same for every hit set. The caller's
-    * count()/collect() on the returned frame costs zero jobs. */
+    * paths: one scan collects the hit rows (driver-bounded: k rows, or the
+    * caller's df bound), returned in the order of `hits`, with `score`
+    * appended when `withScore`. A lazy join+orderBy would pay a global-sort
+    * sample+shuffle per action — the multi-stage floor these paths exist to
+    * remove — and even a broadcast-join fetch costs an extra AQE stage job.
+    * The scan (one job) reads the pinned docs' batches that hold the hits,
+    * or the hits' d_bucket directories, and its code is the same for every
+    * hit set. The caller's count()/collect() on the returned frame costs
+    * zero jobs. */
   private def localDocsFetch(hits: Seq[(Long, Double)], withScore: Boolean): DataFrame = {
     if (hits.isEmpty) return emptyDocs(withScore)
     val ords = hits.map(_._1)
     val span = blockParams.bucketSpan
-    val docsSide =
-      if (index.docs.columns.contains("d_bucket") && span > 0)
-        bucketPruned(index.docs, "d_bucket", ords.map(o => (o / span).toInt))
-      else index.docs
+    val docsSide = servingDocs match {
+      case Some(pinned) => pinned.rowsIn("doc_ord", ords)
+      case None =>
+        val byBucket =
+          if (index.docs.columns.contains("d_bucket") && span > 0)
+            index.docs.filter(
+              col("d_bucket").isin(ords.map(o => (o / span).toInt).distinct.sorted: _*))
+          else index.docs
+        byBucket.filter(inSet(col("doc_ord"), ords))
+    }
     val cols = "doc_ord" +: docsSide.columns.filterNot(_ == "doc_ord").toSeq
     val fetchDf = docsSide.select(cols.map(col): _*)
-      .filter(inSet(col("doc_ord"), ords))
     val byOrd = fetchDf.collect().map(r => r.getLong(0) -> r).toMap
     val rows = hits.flatMap { case (ord, score) =>
       byOrd.get(ord).map(r => if (withScore) Row.fromSeq(r.toSeq :+ score) else r)
@@ -682,12 +676,12 @@ final class Searcher(
     * or facet a huge matched set. */
   def countMatches(keyword: String, logic: Logic): Long = {
     servingByBucket match {
-      case Some(pinned) =>
+      case Some(_) =>
         // serving fast path: one shuffle-free job over the bucket-pinned
         // blocks (per-bucket sorted-merge counts, summed on the driver) —
         // count-identical to the aggregation plan (spec-asserted)
         resolveLive(analyzer.terms(keyword), logic).fold(0L)(rts =>
-          BlockMaxWand.matchCountLocal(pinned, rts.map(_.termId), logic == And))
+          BlockMaxWand.matchCountLocal(blocksFor(rts), rts.map(_.termId), logic == And))
       case None =>
         matchedAgg(keyword, logic, ranked = false) match {
           case None          => 0L
@@ -1605,12 +1599,12 @@ final class Searcher(
     if (rts.isEmpty) return emptyDocs(withScore = true).limit(0)
     val weights = rts.map(rt => rt.termId -> bm25Idf(rt.df)).toMap
     servingByBucket match {
-      case Some(pinned) =>
+      case Some(_) =>
         // serving fast path: one shuffle-free job over the bucket-pinned
         // blocks collects the k winners (score desc, doc_ord asc), then the
         // shared LocalRelation fetch of exactly those docs — two
         // cached-scan jobs per query, no exchange anywhere
-        localDocsFetch(BlockMaxWand.topKLocal(pinned, weights, k, blockParams,
+        localDocsFetch(BlockMaxWand.topKLocal(blocksFor(rts), weights, k, blockParams,
           index.avgDocLen, metrics).toSeq, withScore = true)
       case None =>
         // top is <= k rows (BlockMaxWand.topK ends in a limit), so the
@@ -1664,7 +1658,8 @@ final class Searcher(
   def bm25TopKBatchWand(keywords: Seq[String], k: Int,
       metrics: Option[WandMetrics] = None): DataFrame = {
     require(k >= 0, s"k must be >= 0, got $k")
-    val (slots, rts) = if (k == 0) (Nil, Nil) else batchSlots(keywords)
+    if (k == 0) return Seq.empty[(Int, Long, Long, Double)].toDF("q_id", "rank", "doc_ord", "score")
+    val (slots, rts) = batchSlots(keywords)
     val queries: Map[Int, Map[Long, Double]] = slots.groupBy(_._1)
       .map { case (qi, rows) => qi -> rows.map(r => r._2 -> r._3).toMap }
     BlockMaxWand.topKBatch(blocksFor(rts), queries, k, blockParams,

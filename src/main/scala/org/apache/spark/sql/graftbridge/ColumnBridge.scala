@@ -35,9 +35,9 @@ object ColumnBridge {
     * either name another class (`Set1`…`Set4`: new code per size) or come
     * back from task serialization as one (a map's key set returns as a
     * `Set2`, failing the cast). Not for int columns: `InSet` over
-    * `IntegerType` compiles a `switch` with the values inlined. Cached-batch
-    * pruning reads `In` but not `InSet`, so over a pinned table every
-    * batch is scanned. */
+    * `IntegerType` compiles a `switch` with the values inlined. Spark's
+    * cached-batch pruning reads `In` but not `InSet`: read a pinned table
+    * through [[PinnedTable.rowsIn]], which skips the batches itself. */
   def inSet(c: Column, values: Iterable[Any]): Column =
     column(InSet(expression(c),
       immutable.HashSet.from(values.iterator.map(CatalystTypeConverters.convertToCatalyst))))
