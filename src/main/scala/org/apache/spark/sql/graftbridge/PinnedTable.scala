@@ -2,7 +2,6 @@ package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.{DataFrame, classic}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.columnar.{CachedBatch, SimpleMetricsCachedBatch}
 import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 import org.apache.spark.sql.functions.col
@@ -71,19 +70,16 @@ object PinnedTable {
 
   /** Whether `batch` may hold one of the ascending `keys` in its long
     * column `ordinal`. The default serializer's stats row carries five
-    * fields per column, lower bound first, then upper bound; any other
-    * batch class is kept. */
-  private def mayHold(batch: Any, ordinal: Int, keys: Array[Long]): Boolean = batch match {
+    * fields per column, lower bound first, then upper bound (a batch with
+    * no values in the column has lower > upper and is skipped); a batch of
+    * another serializer is kept. */
+  private def mayHold(batch: CachedBatch, ordinal: Int, keys: Array[Long]): Boolean = batch match {
     case b: SimpleMetricsCachedBatch =>
-      val stats: InternalRow = b.stats
-      if (stats.isNullAt(5 * ordinal) || stats.isNullAt(5 * ordinal + 1)) true
-      else {
-        val lo = stats.getLong(5 * ordinal)
-        val hi = stats.getLong(5 * ordinal + 1)
-        val at = java.util.Arrays.binarySearch(keys, lo)
-        val first = if (at >= 0) at else -at - 1 // first key >= lo
-        first < keys.length && keys(first) <= hi
-      }
+      val lo = b.stats.getLong(5 * ordinal)
+      val hi = b.stats.getLong(5 * ordinal + 1)
+      val at = java.util.Arrays.binarySearch(keys, lo)
+      val first = if (at >= 0) at else -at - 1 // first key >= lo
+      first < keys.length && keys(first) <= hi
     case _ => true
   }
 }
